@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ops.Transforms
 import graft.schema.Schemas
-import graft.sinks.{CsvAppend, MergeOverwrite, RestSink, UpsertIgnore}
+import graft.sinks.{CsvAppend, MergeOverwrite, RestSink, StoreRead, UpsertIgnore}
 import graft.sources.{CsvHistorySource, HtmlRatesSource, RestJsonSource}
 
 /** Failure alerting seam (utils/email_utils.py:47-61 SMTP alert_admin).
@@ -42,11 +42,11 @@ object Pipelines {
       val df = RestJsonSource.read(spark, fetch)
         .withColumn("created_at", current_timestamp().cast("timestamp_ntz"))
         .cache()
-      CsvAppend(df.drop("created_at"), csvPath)
-      val res = UpsertIgnore(spark, df, tablePath,
-        Schemas.apiKey, pruneCol = Some("timestamptz"))
-      df.unpersist()
-      Some(res)
+      try {
+        CsvAppend(df.drop("created_at"), csvPath)
+        Some(UpsertIgnore(spark, df, tablePath,
+          Schemas.apiKey, pruneCol = Some("timestamptz")))
+      } finally df.unpersist()
     } catch {
       case e: Exception =>
         alerter.alert("api pipeline failed", e.getMessage)
@@ -93,19 +93,22 @@ object Pipelines {
       tablePath: String,
       alerter: Alerter = LogAlerter): Option[UpsertIgnore.Result] =
     try {
-      val df = HtmlRatesSource.read(spark, html)
-        .withColumn("created_at", current_timestamp().cast("timestamp_ntz"))
-        .cache()
-      if (df.isEmpty) { // A4 gate, etl/web_scraper.py:224
+      val rates = HtmlRatesSource.parseRates(html)
+      // throws on a missing page timestamp, before the empty-table gate
+      val parsed = HtmlRatesSource.read(spark, html, rates)
+      if (rates.isEmpty) { // A4 gate, etl/web_scraper.py:224 — on the driver's rows, no job
         alerter.alert("scrape pipeline", "no rows parsed from rates table")
         None
       } else {
-        MergeOverwrite(spark, df.drop("created_at"), dailyPath,
-          Schemas.scrapedKey, orderCol = "timestamptz")
-        val res = UpsertIgnore(spark, df, tablePath,
-          Schemas.scrapedKey, pruneCol = Some("timestamptz"))
-        df.unpersist()
-        Some(res)
+        val df = parsed
+          .withColumn("created_at", current_timestamp().cast("timestamp_ntz"))
+          .cache()
+        try {
+          MergeOverwrite(spark, df.drop("created_at"), dailyPath,
+            Schemas.scrapedKey, orderCol = "timestamptz")
+          Some(UpsertIgnore(spark, df, tablePath,
+            Schemas.scrapedKey, pruneCol = Some("timestamptz")))
+        } finally df.unpersist()
       }
     } catch {
       case e: Exception =>
@@ -116,6 +119,12 @@ object Pipelines {
   /** Sync (services/supabase.py:42-76): 20-minute `created_at` delta from
     * each source table, provenance-tagged, column-union schema merge
     * (§1.2 drift), shipped via the partition-parallel REST sink.
+    *
+    * One Spark job a day: the tables are schema-guarded upsert targets, so
+    * `StoreRead` serves their footer schemas from its cache, and the
+    * shipped-row count comes back from the sink's own job (no cache, no
+    * count). Returns the number of rows shipped; `post` never sees an
+    * empty batch (A4 gate, supabase.py:65).
     */
   def sync(
       spark: SparkSession,
@@ -128,13 +137,9 @@ object Pipelines {
       val deltas = tables.map { case (path, tag) =>
         Transforms.withSource(tag)(
           Transforms.recentDelta("created_at", lit(now).cast("timestamp_ntz"), minutes)(
-            spark.read.parquet(path)))
+            StoreRead.parquet(spark, path)))
       }
-      val unified = Transforms.unionBySchema(deltas).cache()
-      val n = unified.count()
-      if (n > 0) RestSink(unified, batchSize = 500)(post) // A4 gate, supabase.py:65
-      unified.unpersist()
-      Some(n)
+      Some(RestSink(Transforms.unionBySchema(deltas), batchSize = 500)(post))
     } catch {
       case e: Exception =>
         alerter.alert("sync failed", e.getMessage) // supabase.py:70-73
@@ -178,8 +183,12 @@ object Orchestrator {
       val hp = new org.apache.hadoop.fs.Path(p)
       hp.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(hp)
     }
-    val synced = Pipelines.sync(spark, syncTables,
-      java.time.LocalDateTime.now(), post, alerter = alerter)
+    // `created_at` is stamped in the SESSION time zone (current_timestamp
+    // cast to timestamp_ntz), so the window's `now` must be too — the JVM's
+    // zone can differ and would shift the 20-minute window off the rows.
+    val now = java.time.LocalDateTime.now(
+      java.time.ZoneId.of(spark.sessionState.conf.sessionLocalTimeZone))
+    val synced = Pipelines.sync(spark, syncTables, now, post, alerter = alerter)
     EtlReport(api, hist, scr, synced)
   }
 }

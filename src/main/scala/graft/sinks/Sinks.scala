@@ -1,8 +1,9 @@
 package graft.sinks
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import graft.ops.Transforms
 
 /** K5 — THE central sink semantic: idempotent insert-if-absent on a
@@ -26,8 +27,13 @@ import graft.ops.Transforms
   *     correct direction; without pruning it would broadcast all of
   *     history, which is exactly the 100 TB failure mode.)
   *
-  * Computing the batch's min/max collects two scalars from the SMALL side
-  * only — never a full-table collect.
+  * Job budget (the batch is small, so each Spark job's fixed driver cost
+  * IS the latency): one job scans the cached batch for its row count and
+  * `pruneCol` bounds (observed metrics, three scalars from the SMALL side
+  * — never a full-table collect); an absent target then takes one write
+  * job. An existing target adds the materialized delta (broadcast build +
+  * one checkpoint job that also counts it) and its append, plus one
+  * footer-inference job on the first read of a path in the process.
   */
 object UpsertIgnore {
 
@@ -88,35 +94,16 @@ object UpsertIgnore {
       batch.join(keySide, keys, "left_anti")
   }
 
-  /** Anti-join `incoming` against the live target and append the delta.
-    * Returns inserted/skipped counts (K9 row-count accounting,
-    * etl/api_fetcher.py:189).
-    */
-  /** @param partitionBy physical partition columns for the target (e.g.
-    *        a date column). With it, `pruneCol` bounds become PARTITION
-    *        pruning on the existing scan (PartitionFilters, zero data
-    *        files read outside the batch's range) — the layout SURVEY §6
-    *        prescribes for the 100 TB target table.
-    * @param transactional commit through the TxTable manifest log: the
-    *        append publishes atomically (a reader racing the insert sees
-    *        the batch entirely or not at all — a plain append exposes
-    *        files as the committer moves them), and a crashed append
-    *        leaves only an orphan generation the rerun reclaims. Read
-    *        the table back with `TxTable.read`.
-    * @param statsCols transactional only: log per-generation min/max of
-    *        these columns in the manifest so `TxTable.readWhere` can
-    *        skip generations — an append stream keyed by time or id
-    *        blocks gets range-pruned reads for free.
-    */
   /** Count-free sibling of [[apply]] for the durable-store registration
     * path (the incremental dedup stores): same anti-join-append
     * semantics and the same pruned-broadcast delta plan, but no
-    * accounting — the batch cache/count and delta-count jobs exist only
-    * to fill [[Result]], and a store ingest never reads them. A caller
+    * accounting — the batch stats scan and the delta checkpoint exist
+    * only to fill [[Result]], and a store ingest never reads them. A caller
     * registering SEVERAL tables from one batch passes the batch's key
     * range once via `bounds` (the min/max Row of `pruneCol`), collapsing
     * the per-table bounds scans too: registration is then 1 shared
-    * bounds job + 1 append job per table instead of ~4 jobs per table.
+    * bounds job + one append (broadcast build + write) per table, where
+    * [[apply]] would add its stats scan and delta checkpoint per table.
     * At per-batch ingest cadence the fixed job count IS the latency;
     * the idempotence contract (anti-join per table, crash-rerun safe)
     * is unchanged.
@@ -150,6 +137,27 @@ object UpsertIgnore {
         .write.mode("append").parquet(targetPath)
     }
 
+  /** Anti-join `incoming` against the live target and append the delta.
+    * Returns inserted/skipped counts (K9 row-count accounting,
+    * etl/api_fetcher.py:189). The batch is cached for the call unless the
+    * caller already cached it; a caller's cache entry is left in place.
+    *
+    * @param partitionBy physical partition columns for the target (e.g.
+    *        a date column). With it, `pruneCol` bounds become PARTITION
+    *        pruning on the existing scan (PartitionFilters, zero data
+    *        files read outside the batch's range) — the layout SURVEY §6
+    *        prescribes for the 100 TB target table.
+    * @param transactional commit through the TxTable manifest log: the
+    *        append publishes atomically (a reader racing the insert sees
+    *        the batch entirely or not at all — a plain append exposes
+    *        files as the committer moves them), and a crashed append
+    *        leaves only an orphan generation the rerun reclaims. Read
+    *        the table back with `TxTable.read`.
+    * @param statsCols transactional only: log per-generation min/max of
+    *        these columns in the manifest so `TxTable.readWhere` can
+    *        skip generations — an append stream keyed by time or id
+    *        blocks gets range-pruned reads for free.
+    */
   def apply(
       spark: SparkSession,
       incoming: DataFrame,
@@ -159,45 +167,81 @@ object UpsertIgnore {
       partitionBy: Seq[String] = Nil,
       transactional: Boolean = false,
       statsCols: Seq[String] = Nil): Result = {
-    val batch = incoming.cache()
+    // A frame the caller cached stays the caller's: caching it again is a
+    // no-op, and unpersisting it here would drop the caller's entry.
+    val owned = incoming.storageLevel == StorageLevel.NONE
+    val batch = if (owned) incoming.cache() else incoming
     try {
-      val total = batch.count()
-      if (transactional) {
-        TxTable.currentManifest(spark, targetPath) match {
-          case None =>
-            if (total > 0)
-              TxTable.commit(spark, batch, targetPath, partitionBy,
-                replaceAll = true, statsCols = statsCols)
-            return Result(total, 0)
-          case Some(m) =>
-            val existingAll = TxTable.read(spark, targetPath).get
-            SchemaGuard.requireAligned(spark, batch, existingAll, partitionBy, targetPath)
-            val delta = deltaPlan(spark, batch, existingAll, keys, pruneCol)
-              .select(existingAll.columns.toSeq.map(col): _*)
-            val inserted = delta.count()
-            if (inserted > 0)
-              TxTable.commit(spark, delta, targetPath, partitionBy,
-                append = true, expectedVersion = Some(m.version),
-                statsCols = statsCols)
-            return Result(inserted, total - inserted)
-        }
-      }
-      val delta =
-        if (!targetExists(spark, targetPath)) batch
+      val (total, bounds) = batchStats(batch, keys, pruneCol)
+      // the live target, with the manifest version a transactional
+      // append must find unchanged at commit
+      val target: Option[(DataFrame, Option[Long])] =
+        if (transactional)
+          TxTable.currentManifest(spark, targetPath).map(m =>
+            (TxTable.read(spark, targetPath).get, Some(m.version)))
+        else if (targetExists(spark, targetPath))
+          Some((StoreRead.parquet(spark, targetPath), None))
+        else None
+      // Never called with nothing to insert: Spark writes an empty file
+      // from partition 0, so an empty append would add a file per replay.
+      def write(df: DataFrame, version: Option[Long]): Unit =
+        if (transactional)
+          TxTable.commit(spark, df, targetPath, partitionBy,
+            replaceAll = version.isEmpty, append = version.nonEmpty,
+            expectedVersion = version, statsCols = statsCols)
         else {
-          val existingAll = graft.sinks.StoreRead.parquet(spark, targetPath)
-          SchemaGuard.requireAligned(spark, batch, existingAll, partitionBy, targetPath)
-          deltaPlan(spark, batch, existingAll, keys, pruneCol)
-            .select(existingAll.columns.toSeq.map(col): _*)
+          val writer = df.write.mode("append")
+          (if (partitionBy.nonEmpty) writer.partitionBy(partitionBy: _*) else writer)
+            .parquet(targetPath)
         }
-      val inserted = delta.count()
-      if (inserted > 0) {
-        val writer = delta.write.mode("append")
-        (if (partitionBy.nonEmpty) writer.partitionBy(partitionBy: _*) else writer)
-          .parquet(targetPath)
+      target match {
+        case None =>
+          if (total > 0) write(batch, None)
+          Result(total, 0)
+        case Some((existingAll, version)) =>
+          SchemaGuard.requireAligned(spark, batch, existingAll, partitionBy, targetPath)
+          if (total == 0) Result(0, 0)
+          else {
+            val (delta, inserted) = pinnedCount(
+              deltaPlan(spark, batch, existingAll, keys, pruneCol, bounds)
+                .select(existingAll.columns.toSeq.map(col): _*))
+            if (inserted > 0) write(delta, version)
+            Result(inserted, total - inserted)
+          }
       }
-      Result(inserted, total - inserted)
-    } finally batch.unpersist()
+    } finally if (owned) batch.unpersist()
+  }
+
+  /** Row count and, when `pruneCol` is a key, its [min,max] Row — in ONE
+    * job: observed metrics over a no-op write, which also fills the
+    * batch's cache for the delta that follows. The bounds Row is what
+    * [[deltaPlan]] takes as `precomputedBounds` (null bounds on an empty
+    * batch mean no pruning).
+    */
+  private def batchStats(
+      batch: DataFrame,
+      keys: Seq[String],
+      pruneCol: Option[String]): (Long, Option[Row]) = {
+    val prune = pruneCol.filter(keys.contains)
+    val obs = Observation()
+    val bounds = prune.toSeq.flatMap(c =>
+      Seq(min(col(c)).as("lo"), max(col(c)).as("hi")))
+    batch.observe(obs, count(lit(1)).as("n"), bounds: _*)
+      .write.format("noop").mode("overwrite").save()
+    val m = obs.get
+    (m("n").asInstanceOf[Long], prune.map(_ => Row(m("lo"), m("hi"))))
+  }
+
+  /** Materialize `delta` once (eager local checkpoint) and count it in the
+    * same job, so the count and the append do not each re-run the anti
+    * join and its broadcast build. The checkpoint's blocks (at most the
+    * batch's size) go with the frame: Spark's context cleaner drops them
+    * once it is unreachable.
+    */
+  private def pinnedCount(delta: DataFrame): (DataFrame, Long) = {
+    val obs = Observation()
+    val pinned = delta.observe(obs, count(lit(1)).as("n")).localCheckpoint()
+    (pinned, obs.get("n").asInstanceOf[Long])
   }
 }
 
@@ -642,13 +686,22 @@ object MergeOverwrite {
   * payloads means no driver-side collect — each executor ships its own
   * partition (the reference's `df.to_dict("records")` collect would OOM the
   * driver at scale).
+  *
+  * Returns the number of rows shipped, counted by an accumulator inside
+  * the one `foreachPartition` job, so a caller needs no separate count.
+  * `post` is never called with an empty batch: an empty frame ships
+  * nothing and returns 0 (the A4 gate, services/supabase.py:65).
   */
 object RestSink {
-  def apply(df: DataFrame, batchSize: Int)(post: Seq[String] => Unit): Unit = {
-    val json = df.toJSON
-    json.foreachPartition { it: Iterator[String] =>
-      it.grouped(batchSize).foreach(post(_))
+  def apply(df: DataFrame, batchSize: Int)(post: Seq[String] => Unit): Long = {
+    val shipped = df.sparkSession.sparkContext.longAccumulator
+    df.toJSON.foreachPartition { it: Iterator[String] =>
+      it.grouped(batchSize).foreach { batch =>
+        post(batch)
+        shipped.add(batch.size.toLong)
+      }
     }
+    shipped.sum
   }
 }
 

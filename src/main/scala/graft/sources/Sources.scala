@@ -100,11 +100,15 @@ object HtmlRatesSource {
   /** Full source: HTML text → scraped-shape DataFrame with the page
     * timestamp stamped on every row (C5, etl/web_scraper.py:98-99).
     */
-  def read(spark: SparkSession, html: String): DataFrame = {
+  def read(spark: SparkSession, html: String): DataFrame =
+    read(spark, html, parseRates(html))
+
+  /** [[read]] over rates the caller already parsed from `html`. */
+  def read(spark: SparkSession, html: String, rates: Seq[(String, Double)]): DataFrame = {
     val ts = extractTimestamp(html)
       .getOrElse(throw new IllegalArgumentException(
         "ratesTimestamp span missing or unparseable"))
-    val rows = parseRates(html).map { case (name, rate) =>
+    val rows = rates.map { case (name, rate) =>
       Row(name, "EUR", rate, ts.toLocalDate, ts, null)
     }
     spark.createDataFrame(

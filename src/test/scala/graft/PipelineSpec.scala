@@ -5,8 +5,15 @@ import graft.pipelines.{Alerter, Orchestrator, Pipelines}
 
 class PipelineSpec extends SparkSpec {
 
-  private def readFixture(name: String): String =
-    scala.io.Source.fromFile(fixture(name)).mkString
+  private def runEtl(s: org.apache.spark.sql.SparkSession, scrapeHtml: String) =
+    Orchestrator.runEtl(
+      s,
+      fetchApi = () => readFixture("frankfurter_latest.json"),
+      historyCsv = fixture("daily_forex_rates.csv"),
+      scrapeHtml = scrapeHtml,
+      workDir = tmpDir("orch"),
+      anchor = java.time.LocalDate.parse("2026-08-10"),
+      post = SyncHarness.post)
 
   test("EP1 api pipeline end-to-end: json -> long rows -> upsert table") {
     val work = tmpDir("ep1")
@@ -71,7 +78,7 @@ class PipelineSpec extends SparkSpec {
     SyncHarness.out.clear()
     val n = Pipelines.sync(spark,
       Seq(s"$work/api" -> "api", s"$work/scraped" -> "web_scraper"),
-      java.time.LocalDateTime.now(), SyncHarness.post)
+      sessionNow(), SyncHarness.post)
     assert(n.contains(9L)) // 5 api + 4 scraped, all inside the window
     val shipped = SyncHarness.out.toArray(Array.empty[String])
     assert(shipped.length == 9)
@@ -82,20 +89,27 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("orchestrator: full run_etl analog, continue-on-failure") {
-    val work = tmpDir("orch")
     SyncHarness.out.clear()
-    val report = Orchestrator.runEtl(
-      spark,
-      fetchApi = () => readFixture("frankfurter_latest.json"),
-      historyCsv = fixture("daily_forex_rates.csv"),
-      scrapeHtml = "<html>broken page</html>", // EP3 fails
-      workDir = work,
-      anchor = java.time.LocalDate.parse("2026-08-10"),
-      post = SyncHarness.post)
+    val report = runEtl(spark, "<html>broken page</html>") // EP3 fails
     assert(report.api.exists(_.inserted == 5))
     assert(report.history.exists(_.inserted == 6))
     assert(report.scrape.isEmpty) // failed but did not abort the run
     assert(report.synced.contains(11L)) // 5 api + 6 history
+    assert(SyncHarness.out.size() == 11)
+  }
+
+  test("orchestrator: sync window follows the session time zone, not the JVM's") {
+    // A session zone BEHIND the JVM's puts every created_at before a
+    // JVM-zone `now` minus 20 minutes; one ahead of it is the other way.
+    val jvmOffsetH = java.time.ZoneId.systemDefault().getRules
+      .getOffset(java.time.Instant.now()).getTotalSeconds / 3600
+    val behind = java.time.ZoneOffset.ofHours(math.max(-18, jvmOffsetH - 9)).getId
+    for (zone <- Seq("Asia/Tokyo", behind)) {
+      val s = spark.newSession()
+      s.conf.set("spark.sql.session.timeZone", zone)
+      val report = runEtl(s, "<html>broken page</html>")
+      assert(report.synced.contains(11L), s"session zone $zone: $report")
+    }
   }
 }
 

@@ -610,8 +610,32 @@ class SinksSpec extends SparkSpec {
 
   test("K7 rest sink ships every row in partition-side batches") {
     RestSinkTestHarness.acc.clear()
-    RestSinkTestHarness.deliver(spark)
+    assert(RestSinkTestHarness.deliver(spark) == 7L) // rows shipped
     assert(RestSinkTestHarness.acc.size() == 7)
+  }
+
+  test("K7 rest sink: an empty frame returns 0 and never posts") {
+    RestSinkTestHarness.calls.set(0)
+    val empty = Seq.empty[(Int, String)].toDF("id", "v")
+    assert(RestSink(empty, batchSize = 3)(RestSinkTestHarness.post) == 0L)
+    assert(RestSinkTestHarness.calls.get() == 0, "post called with an empty batch")
+  }
+
+  test("K5 leaves a caller's cache entry in place and releases its own") {
+    import org.apache.spark.storage.StorageLevel
+    val dir = tmpDir("k5cache") + "/t"
+    val keys = Seq("currency", "timestamptz")
+    val cached = batch(("USD", "d1", 1.0), ("GBP", "d1", 2.0)).cache()
+    assert(cached.count() == 2)
+    UpsertIgnore(spark, cached, dir, keys) // absent target
+    assert(cached.storageLevel != StorageLevel.NONE, "caller's cache dropped")
+    val r = UpsertIgnore(spark, cached, dir, keys) // existing target
+    assert(r == UpsertIgnore.Result(inserted = 0, skipped = 2))
+    assert(cached.storageLevel != StorageLevel.NONE, "caller's cache dropped")
+    cached.unpersist()
+    val own = batch(("JPY", "d1", 3.0))
+    assert(UpsertIgnore(spark, own, dir, keys) == UpsertIgnore.Result(1, 0))
+    assert(own.storageLevel == StorageLevel.NONE, "sink left its cache behind")
   }
 }
 
@@ -622,9 +646,15 @@ class SinksSpec extends SparkSpec {
   */
 object RestSinkTestHarness {
   val acc = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-  def deliver(spark: org.apache.spark.sql.SparkSession): Unit = {
+  val calls = new java.util.concurrent.atomic.AtomicInteger(0)
+  val post: Seq[String] => Unit = { recs =>
+    require(recs.nonEmpty && recs.size <= 3, s"batch of ${recs.size}") // batchSize 3
+    RestSinkTestHarness.calls.incrementAndGet()
+    recs.foreach(RestSinkTestHarness.acc.add)
+  }
+  def deliver(spark: org.apache.spark.sql.SparkSession): Long = {
     import spark.implicits._
     val df = (1 to 7).map(i => (i, s"row$i")).toDF("id", "v")
-    RestSink(df, batchSize = 3) { recs => recs.foreach(RestSinkTestHarness.acc.add) }
+    RestSink(df, batchSize = 3)(post)
   }
 }

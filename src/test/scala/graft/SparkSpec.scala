@@ -15,8 +15,42 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   def fixture(name: String): String =
     getClass.getResource(s"/fixtures/$name").getPath
 
+  def readFixture(name: String): String =
+    scala.io.Source.fromFile(fixture(name)).mkString
+
+  /** Wall-clock now in `s`'s session time zone — the zone a
+    * `current_timestamp().cast("timestamp_ntz")` column is stamped in.
+    */
+  def sessionNow(s: SparkSession = spark): java.time.LocalDateTime =
+    java.time.LocalDateTime.now(
+      java.time.ZoneId.of(s.sessionState.conf.sessionLocalTimeZone))
+
   def tmpDir(prefix: String): String =
     Files.createTempDirectory(prefix).toString
+
+  /** `body`'s result and the number of Spark jobs it submitted. The
+    * listener bus is asynchronous, so it is drained before the listener
+    * is added (no earlier job leaks in) and after the body (no job of the
+    * body is missed). Suites run one at a time in the forked JVM, so the
+    * count is the body's own.
+    */
+  def jobsIn[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    org.apache.spark.ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val r = body
+      org.apache.spark.ListenerBusDrain(sc)
+      (r, jobs.get())
+    } finally sc.removeSparkListener(listener)
+  }
 }
 
 object SparkSpec {
