@@ -14,6 +14,11 @@ object Verify {
       .config("spark.ui.enabled", "false")
       .config("spark.sql.extensions", "graft.functions.GraftExtensions")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      // the AQE byte-sizing confs Bench times under, so the verified
+      // regime is the timed one
+      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
+      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
+        sys.env.getOrElse("SPARK_GRAFT_ADVISORY_PART", "64m"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()

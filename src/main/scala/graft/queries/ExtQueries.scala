@@ -31,10 +31,16 @@ object ExtQueries {
     * factor (≤500-doc planted corpora, fixture batches): these flows
     * stack tens of small stages over KB-sized frames, and their
     * HOF-heavy expressions (gates, shingles, minhash, pair expansion)
-    * carry fresh lambda expression ids, so per-action codegen misses
-    * the Janino cache and compile time dwarfs the row work (measured:
-    * the incremental-recall gate halves under this regime, 6.0 s →
-    * 3.2 s warm, job-time sum 4.6 s → 1.5 s). Interpreted execution +
+    * make large generated classes. Their warm recompiles came from
+    * Spark's generated-class cache, 100 classes by default, evicting
+    * each class before it was reused, not from lambda expression ids:
+    * with this regime's two codegen overrides removed,
+    * ext_incremental_recall and ext_takedown_e2e recompiled 160 and 699
+    * classes on a warm repeat at 100 entries, and 0 at 2048 (the
+    * GraftExtensions size is larger still). Codegen'd execution still
+    * loses on these frames with no compile at all (measured warm, sf0.1,
+    * 4 cores: ext_takedown_e2e 18.6 s codegen'd vs 6.3 s here, task
+    * time 27.6 s vs 2.0 s), so the overrides stay. Interpreted execution +
     * batch-sized shuffle partitioning is exactly how a real deployment
     * sizes a bounded compliance check; production-sized batches keep
     * codegen and amortize the compile. Results are identical — every
@@ -596,15 +602,14 @@ object ExtQueries {
           accounting = false)
       // the e2e flow is ~150 tiny stages over <=40-row frames whose
       // plans stack the big HOF expressions (gates, shingles, minhash):
-      // higher-order lambda variables carry fresh expression ids, so
-      // expression codegen MISSES its cache and pays ~2.4 s of Janino
-      // per executed projection — measured ~30 s of the gate's cost
-      // against microseconds of actual row work (NO_CODEGEN runs the
-      // same stage in 0.3 s). The eager section therefore runs fully
+      // at Spark's default 100-class cache it recompiled ~700 classes
+      // on every run, and none warm at GraftExtensions' size, yet
+      // codegen'd execution stays ~3x slower here (boundedGate has the
+      // measurement). The eager section therefore runs fully
       // INTERPRETED with 4 shuffle partitions (the stream_stream_join
       // low-partition discipline): exactly how a real deployment sizes
       // a 40-row compliance check, while production-sized batches keep
-      // codegen and amortize the compile. Confs restored before
+      // codegen. Confs restored before
       // returning — the result frame is already eagerly checkpointed.
       // the shared bounded-gate regime (this gate is where it was first
       // adjudicated): interpreted, 4 partitions, AQE off, and — r16 —

@@ -51,6 +51,19 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
       (r, jobs.get())
     } finally sc.removeSparkListener(listener)
   }
+
+  /** `body`'s result and the number of classes Janino compiled while it
+    * ran: cache misses of Spark's generated-class cache, counted by
+    * Spark's own `CodegenMetrics`. The counter is JVM-wide, so like
+    * `jobsIn` this relies on suites running one at a time.
+    */
+  def compilesIn[T](body: => T): (T, Long) = {
+    val h = org.apache.spark.metrics.source.CodegenMetrics
+      .METRIC_COMPILATION_TIME
+    val before = h.getCount
+    val r = body
+    (r, h.getCount - before)
+  }
 }
 
 object SparkSpec {
