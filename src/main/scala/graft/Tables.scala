@@ -17,26 +17,15 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Parquet footer schemas, inferred ONCE per (dir, table) for the
-    * process: every `spark.read.parquet` without an explicit schema
-    * submits a footer-inference JOB, and the query registry constructs
-    * a fresh read per query — ~1-2 such jobs per bench entry, pure
-    * fixed cost (r16 job log). Passing the cached schema skips the
-    * inference job with a byte-identical scan (same footer, same
-    * types); at 100 TB this is the catalog-supplied-schema discipline.
-    * The cache keys on the resolved path, so two testdata dirs never
-    * share an entry; testdata is driver-provided and immutable within
-    * a run.
+  /** A testdata table, its parquet footer schema inferred ONCE per path
+    * for the process (`StoreRead.parquet`): the query registry constructs
+    * a fresh read per query, and each schemaless read would submit a
+    * footer-inference job. The cache keys on the resolved path, so two
+    * testdata dirs never share an entry; testdata is immutable within a
+    * run.
     */
-  private val schemaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
-
-  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val path = s"$dir/$name.parquet"
-    val schema = schemaCache.computeIfAbsent(path,
-      p => spark.read.parquet(p).schema)
-    spark.read.schema(schema).parquet(path)
-  }
+  def load(spark: SparkSession, dir: String, name: String): DataFrame =
+    graft.sinks.StoreRead.parquet(spark, s"$dir/$name.parquet")
 
   def lineitem(s: SparkSession, dir: String): DataFrame  = load(s, dir, "lineitem")
   def orders(s: SparkSession, dir: String): DataFrame    = load(s, dir, "orders")

@@ -30,13 +30,19 @@ object Verify {
       case Some(names) => SparkEntry.queries.filter(kv => names(kv._1))
       case None        => SparkEntry.queries
     }
-    selected.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+    val failed = selected.flatMap { case (name, fn) =>
+      try {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+        None
+      } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        Some(name)
       }
     }
+    // one summary line, so a failure is not lost among the log lines
+    System.err.println(
+      s"[verify] failed ${failed.size}/${selected.size}: ${failed.mkString(",")}")
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.

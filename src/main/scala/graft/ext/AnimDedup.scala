@@ -24,7 +24,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * hashes broadcast, combined batch+store hub cap (incremental ==
   * one-shot [[Multimodal.animDups]] at the cap boundary), re-ingest
   * replay-safe, pairs materialized before the store mutates, takedown
-  * tombstones with physical erasure at [[compactStore]].
+  * tombstones (`LandmarkStore.forget`) with physical erasure at
+  * `LandmarkStore.compactStore`.
   */
 object AnimDedup {
 
@@ -44,18 +45,4 @@ object AnimDedup {
     LandmarkStore.ingest(spark,
       Multimodal.animLandmarks(spark, media, maxHashFrames),
       storePath, minSharedFrames, maxBucket)
-
-  /** Takedown: forget these owners' landmarks (O(takedown) tombstone
-    * append; probes mask immediately, [[compactStore]] erases
-    * physically). Fresh copies are admitted again under a new id.
-    */
-  def forget(spark: SparkSession, storePath: String, ids: DataFrame): Unit =
-    LandmarkStore.forget(spark, storePath, ids)
-
-  /** Fold tombstones and compact; returns (filesBefore, filesAfter). */
-  def compactStore(
-      spark: SparkSession,
-      storePath: String,
-      targetFileBytes: Long = 128L * 1024 * 1024): (Int, Int) =
-    LandmarkStore.compactStore(spark, storePath, targetFileBytes)
 }

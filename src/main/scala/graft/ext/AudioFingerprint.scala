@@ -195,10 +195,8 @@ object AudioFingerprint {
       probes: DataFrame,
       k: Int,
       params: Params = Params()): DataFrame =
-    topKOverFps(spark, liveFps(spark, storePath), probes, k, params)
-
-  private def liveFps(spark: SparkSession, storePath: String): DataFrame =
-    LandmarkStore.liveFps(spark, storePath)
+    topKOverFps(spark, LandmarkStore.liveFps(spark, storePath), probes, k,
+      params)
 
   private def topKOverFps(
       spark: SparkSession,
@@ -239,7 +237,8 @@ object AudioFingerprint {
     * fingerprints. Batch hash set broadcasts against ONE unshuffled
     * store scan; a re-ingested doc_id neither self-pairs nor
     * double-registers (keyed appendAbsent); combined batch+store hub
-    * cap (incremental == one-shot at the hub boundary).
+    * cap (incremental == one-shot at the hub boundary). Takedown and
+    * compaction are `LandmarkStore.forget` and `.compactStore`.
     */
   def ingest(
       spark: SparkSession,
@@ -248,19 +247,6 @@ object AudioFingerprint {
       params: Params = Params()): DataFrame =
     LandmarkStore.ingest(spark, fingerprints(spark, media, params),
       storePath, params.minShared, params.maxBucket)
-
-  /** Takedown: forget these owners' fingerprints (O(takedown) tombstone
-    * append; probes mask immediately, compactStore erases physically).
-    */
-  def forget(spark: SparkSession, storePath: String, ids: DataFrame): Unit =
-    LandmarkStore.forget(spark, storePath, ids)
-
-  /** Fold tombstones and compact; returns (filesBefore, filesAfter). */
-  def compactStore(
-      spark: SparkSession,
-      storePath: String,
-      targetFileBytes: Long = 128L * 1024 * 1024): (Int, Int) =
-    LandmarkStore.compactStore(spark, storePath, targetFileBytes)
 
   /** Deterministic tone-sequence WAV (concatenated fixed-frequency
     * segments) — the fixture generator for the audio-dedup gates: a

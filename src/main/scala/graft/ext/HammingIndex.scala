@@ -157,13 +157,12 @@ private[ext] object HammingIndex {
   def forget(spark: SparkSession, path: String, ids: DataFrame,
       what: String): Unit = {
     require(exists(spark, path), s"no $what at $path — build first")
-    ids.select("doc_id").write.mode("append").parquet(s"$path/forgotten")
+    DurableStore.forget(path, ids.select("doc_id"))
   }
 
   private[ext] def tombstones(spark: SparkSession, path: String): Option[DataFrame] =
-    if (StoreTombstones.hasData(spark, s"$path/forgotten"))
-      Some(graft.sinks.StoreRead.parquet(spark, s"$path/forgotten").select("doc_id").distinct())
-    else None
+    DurableStore.read(spark, s"$path/forgotten")
+      .map(_.select("doc_id").distinct())
 
   /** Rewrite the (tiny) tombstone set minus the re-ingested batch ids —
     * stage-aside swapped; deleted outright when nothing remains. Crash

@@ -55,11 +55,6 @@ object IncrementalDedup {
     def rowsPerBand: Int = numHashes / bands
   }
 
-  private def exists(spark: SparkSession, path: String): Boolean = {
-    val p = new Path(path)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
-
   /** The MinHash permutation family a store's signatures were built
     * with, recorded at `storePath/_family` on first ingest. Signatures
     * from different families (native fmix64 vs seeded-xxhash64 fallback)
@@ -102,9 +97,10 @@ object IncrementalDedup {
     if (!storeExists) {
       val fam = if (spark.catalog.functionExists("graft_minhash")) "native"
         else "fallback"
-      // marker first: a crash before the data writes leaves a store the
-      // existence check still classifies as absent, and the rerun just
-      // overwrites the marker — idempotent either way
+      // marker first: a crash before the data writes (or during them,
+      // which leaves only `bands/_temporary/`) leaves a store the
+      // committed-data check still classifies as absent, and the rerun
+      // just overwrites the marker — idempotent either way
       writeFamily(spark, storePath, fam)
       fam
     } else storedFamily(spark, storePath).getOrElse(
@@ -130,7 +126,7 @@ object IncrementalDedup {
       p: Params = Params()): DataFrame = {
     val bandsPath = s"$storePath/bands"
     val shinglesPath = s"$storePath/shingles"
-    val storeExists = exists(spark, bandsPath)
+    val storeExists = DurableStore.hasData(spark, bandsPath)
     val family = resolveFamily(spark, storePath, storeExists)
 
     // consumed by candidates, verification AND the store append
@@ -153,7 +149,11 @@ object IncrementalDedup {
       if (!storeExists)
         Dedup.verifyJaccard(inBatch.distinct(), hashed, hashed, p.threshold)
       else {
-        val hot = probeHotOf(liveBands(spark, storePath), newBands)
+        // live probe surface: a forgotten doc can neither block a new
+        // copy nor appear in a pair (its shingle sets, pruned by
+        // candidate id, are never read)
+        val hot = probeHotOf(DurableStore.live(spark, storePath, "bands"),
+          newBands)
           .localCheckpoint(false)
         // degenerate-bucket cap on the STORE side of the collision
         val hotOk = hot.join(
@@ -200,9 +200,10 @@ object IncrementalDedup {
         org.apache.spark.sql.types.LongType, containsNull = true)).as("hset"))
     if (!storeExists) {
       // FIRST ingest: nothing to anti-join against — plain overwrite
-      // writes are equivalent (and a crash between the two leaves a
-      // state the existence check above re-classifies as absent, so the
-      // rerun overwrites both — same result, still idempotent). Skips
+      // writes are equivalent (and a crash between or during the two
+      // leaves a state the committed-data check above re-classifies as
+      // absent, so the rerun overwrites both — same result, still
+      // idempotent). Skips
       // UpsertIgnore's cache/count/anti-join job overhead per table.
       graft.sinks.WriteLayout.sizedForWrite(shingleRows)
         .write.mode("overwrite").parquet(shinglesPath)
@@ -239,21 +240,6 @@ object IncrementalDedup {
       spark: SparkSession, bandsPath: String, newBands: DataFrame): DataFrame =
     probeHotOf(graft.sinks.StoreRead.parquet(spark, bandsPath), newBands)
 
-  /** The live probe surface: registered band rows minus any whose OWNER
-    * was forgotten (takedown tombstones, see [[forget]]); the tombstone
-    * set is takedown-sized, so it broadcasts into an anti-join along
-    * the same single store scan. Candidates derive from this view, so a
-    * forgotten doc can neither block a new copy nor appear in a pair
-    * (and its shingle sets — pruned by candidate id — are never read).
-    */
-  private def liveBands(spark: SparkSession, storePath: String): DataFrame = {
-    val bands = graft.sinks.StoreRead.parquet(spark, s"$storePath/bands")
-    val fPath = s"$storePath/forgotten"
-    if (!StoreTombstones.hasData(spark, fPath)) bands
-    else bands.join(broadcast(graft.sinks.StoreRead.parquet(spark, fPath)),
-      Seq("doc_id"), "left_anti")
-  }
-
   /** Takedown support: forget every signature OWNED by these ids —
     * appends a tombstone set the probes anti-join (no store rewrite;
     * `compactStore` later erases the rows physically). Fresh copies of
@@ -264,13 +250,11 @@ object IncrementalDedup {
     * carry a `doc_id` column, the store tables' id column.
     */
   def forget(spark: SparkSession, storePath: String, ids: DataFrame): Unit =
-    ids.select("doc_id").write.mode("append")
-      .parquet(s"$storePath/forgotten")
+    DurableStore.forget(storePath, ids.select("doc_id"))
 
   /** Stored doc count (distinct registered documents). */
   def storedDocs(spark: SparkSession, storePath: String): Long =
-    if (!exists(spark, s"$storePath/shingles")) 0L
-    else graft.sinks.StoreRead.parquet(spark, s"$storePath/shingles").count()
+    DurableStore.count(spark, s"$storePath/shingles")
 
   /** Compact both store tables: every ingest appends a small file set,
     * so a long-lived store accumulates exactly the small-file problem
@@ -278,7 +262,7 @@ object IncrementalDedup {
     * file-count-sensitive (one store scan per ingest). The rewrite also
     * FOLDS the takedown tombstones — forgotten owners' band rows and
     * shingle sets are physically erased and `forgotten/` cleared (see
-    * [[StoreTombstones]] for the crash ordering). Run between ingests
+    * [[DurableStore]] for the crash ordering). Run between ingests
     * (compact shares the sink family's single-writer contract).
     * Returns (filesBefore, filesAfter) summed over both tables.
     */
@@ -286,6 +270,6 @@ object IncrementalDedup {
       spark: SparkSession,
       storePath: String,
       targetFileBytes: Long = 128L * 1024 * 1024): (Int, Int) =
-    StoreTombstones.foldAndCompact(spark, s"$storePath/forgotten",
-      Seq(s"$storePath/bands", s"$storePath/shingles"), targetFileBytes)
+    DurableStore.compact(spark, storePath, Seq("bands", "shingles"),
+      targetFileBytes)
 }

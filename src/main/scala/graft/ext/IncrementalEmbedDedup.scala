@@ -1,6 +1,5 @@
 package graft.ext
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.ext.Similarity.{asDouble, dotAuto}
@@ -66,11 +65,6 @@ object IncrementalEmbedDedup {
       pqM: Int = 0,
       pqK: Int = 32)
 
-  private def exists(spark: SparkSession, path: String): Boolean = {
-    val p = new Path(path)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
-
   /** The batch's codes rows, element-nullable like a parquet read-back —
     * the typed encode pass produces containsNull=false arrays, which
     * would trip the store's schema-drift guard on the second ingest
@@ -100,12 +94,12 @@ object IncrementalEmbedDedup {
     val codesPath = s"$storePath/codes"
     val cbPath = s"$storePath/codebooks"
     val pq = params.pqM > 0
-    val storeExists = exists(spark, sigsPath)
+    val storeExists = DurableStore.hasData(spark, sigsPath)
     // a store is EITHER vector-backed or codes-backed for its lifetime:
     // mixing modes across ingests would verify against a side that was
     // never written
     if (storeExists)
-      require(exists(spark, if (pq) codesPath else vecsPath),
+      require(DurableStore.hasData(spark, if (pq) codesPath else vecsPath),
         s"store at $storePath was built with " +
           s"${if (pq) "pqM = 0 (raw vectors)" else "pqM > 0 (PQ codes)"} — " +
           "ingest with the params the store was created with")
@@ -156,8 +150,11 @@ object IncrementalEmbedDedup {
            .select("chunk", "cval"))
        else {
          // ONE store scan, batch chunk keys broadcast — the store side
-         // never shuffles (the IncrementalDedup.probeHot shape)
-         val hot = liveSigs(spark, storePath)
+         // never shuffles (the IncrementalDedup.probeHot shape); on the
+         // live surface a forgotten doc can neither block a new copy nor
+         // appear in a pair, and its stored vector (or PQ codes) is never
+         // read by a verify
+         val hot = DurableStore.live(spark, storePath, "sigs")
            .join(broadcast(e.select("doc_id")), Seq("doc_id"), "left_anti")
            .join(broadcast(chunks.select("chunk", "cval").distinct()),
              Seq("chunk", "cval"), "left_semi")
@@ -268,22 +265,6 @@ object IncrementalEmbedDedup {
     out
   }
 
-  /** The live probe surface: registered signature chunks minus any
-    * whose OWNER was forgotten (takedown tombstones, see [[forget]]) —
-    * the tombstone set broadcasts into an anti-join along the same
-    * single store scan. Candidates derive from this view, so a
-    * forgotten doc can neither block a new copy nor appear in a pair,
-    * and its stored vector (or PQ codes) — read semi-join-pruned to
-    * candidate ids — is never touched by a verify.
-    */
-  private def liveSigs(spark: SparkSession, storePath: String): DataFrame = {
-    val sigs = graft.sinks.StoreRead.parquet(spark, s"$storePath/sigs")
-    val fPath = s"$storePath/forgotten"
-    if (!StoreTombstones.hasData(spark, fPath)) sigs
-    else sigs.join(broadcast(graft.sinks.StoreRead.parquet(spark, fPath)),
-      Seq("doc_id"), "left_anti")
-  }
-
   /** Takedown support: forget every signature AND the stored raw vector
     * / PQ codes OWNED by these ids. This store is the one where forget
     * matters most — it retains the embedding itself, not just a hash,
@@ -296,20 +277,17 @@ object IncrementalEmbedDedup {
     * `ids` must carry a `doc_id` column.
     */
   def forget(spark: SparkSession, storePath: String, ids: DataFrame): Unit =
-    ids.select("doc_id").write.mode("append")
-      .parquet(s"$storePath/forgotten")
+    DurableStore.forget(storePath, ids.select("doc_id"))
 
   /** Stored doc count (distinct registered documents). */
   def storedDocs(spark: SparkSession, storePath: String): Long =
-    if (!exists(spark, s"$storePath/sigs")) 0L
-    else graft.sinks.StoreRead.parquet(spark, s"$storePath/sigs")
-      .select("doc_id").distinct().count()
+    DurableStore.count(spark, s"$storePath/sigs", Seq("doc_id"))
 
   /** Compact the store tables — per-ingest file sets accumulate at the
     * same daily cadence as the sibling stores — AND fold the takedown
     * tombstones: forgotten owners' signature chunks and their RAW
     * VECTORS (or PQ codes) are physically erased and `forgotten/`
-    * cleared (see [[StoreTombstones]] for the crash ordering). Both
+    * cleared (see [[DurableStore]] for the crash ordering). Both
     * backing modes are covered — whichever of `vecs`/`codes` exists is
     * rewritten; the persisted codebooks carry no per-document data and
     * stay. Single-writer contract; returns (filesBefore, filesAfter)
@@ -319,7 +297,6 @@ object IncrementalEmbedDedup {
       spark: SparkSession,
       storePath: String,
       targetFileBytes: Long = 128L * 1024 * 1024): (Int, Int) =
-    StoreTombstones.foldAndCompact(spark, s"$storePath/forgotten",
-      Seq(s"$storePath/sigs", s"$storePath/vecs", s"$storePath/codes"),
+    DurableStore.compact(spark, storePath, Seq("sigs", "vecs", "codes"),
       targetFileBytes)
 }

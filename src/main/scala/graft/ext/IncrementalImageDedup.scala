@@ -78,13 +78,16 @@ object IncrementalImageDedup {
       // marker prevents silent mixing.
       normalizeOrientation: Boolean = false)
 
-  private def exists(spark: SparkSession, path: String): Boolean = {
-    val p = new Path(path)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
-
-  private def bloomDir(storePath: String, maxHamming: Int): String =
-    s"$storePath/bloom_mh$maxHamming"
+  /** The store's bloom coverage: sidecars under `bloom_mh<H>` over the
+    * xxhash64 of the (chunk, cval) blocking keys at maxHamming = H.
+    */
+  private def bloom(storePath: String, params: Params) =
+    DurableStore.Bloom(s"$storePath/bloom_mh${params.maxHamming}",
+      s"$storePath/sigs",
+      _.select(explode(Dedup.shChunks(col("sh"), params.maxHamming)).as("cc"))
+        .select(xxhash64(col("cc.chunk"), col("cc.cval")).as("__kh"))
+        .distinct(),
+      params.bitsPerKey, params.maxBloomBytes)
 
   /** The signature regime this code writes and probes with — a
     * FUNCTION of the hash semantics, not just a version: the plain
@@ -190,7 +193,7 @@ object IncrementalImageDedup {
       storePath: String,
       params: Params = Params()): DataFrame = {
     val sigsPath = s"$storePath/sigs"
-    val storeExists = exists(spark, sigsPath)
+    val storeExists = DurableStore.hasData(spark, sigsPath)
     if (storeExists) checkRegime(spark, storePath, params)
     val sig: org.apache.spark.sql.Column =
       if (params.normalizeOrientation) {
@@ -222,7 +225,7 @@ object IncrementalImageDedup {
     val batchKeys = chunks.select("chunk", "cval").distinct()
       .withColumn("__kh", xxhash64(col("chunk"), col("cval")))
       .localCheckpoint(false)
-    val bDir = bloomDir(storePath, params.maxHamming)
+    val coverage = bloom(storePath, params)
 
     // combined-bucket cap: see IncrementalEmbedDedup — capping either
     // side alone diverges from the one-shot operator at the boundary
@@ -252,15 +255,14 @@ object IncrementalImageDedup {
     // it collects once: the emptiness decision and the broadcast reuse
     // the same job.
     lazy val probeKeys: Option[DataFrame] = // None = no store collision possible
-      KeyBloom.loadSidecarsMeta(spark, bDir, params.maxBloomBytes) match {
+      KeyBloom.loadSidecarsMeta(spark, coverage.dir, params.maxBloomBytes) match {
         case None => Some(batchKeys)
         case Some((blooms, storedKeys)) =>
           if (storedKeys >= 0.25 * blockingKeyspace(params.maxHamming))
             Some(batchKeys) // saturated: a full skip is no longer possible
           else {
-            val bc = spark.sparkContext.broadcast(blooms)
-            val mightCollide = udf((h: Long) => bc.value.exists(_.contains(h)))
-            val hits = batchKeys.filter(mightCollide(col("__kh")))
+            val hits = DurableStore.filterBy(spark, batchKeys, col("__kh"),
+                blooms)
               .select("chunk", "cval").collect()
             if (hits.isEmpty) None
             else Some(spark.createDataFrame(
@@ -280,7 +282,7 @@ object IncrementalImageDedup {
          // covers them, and counting the stored copy too would push a
          // bucket sitting exactly at maxBucket over the cap — a boundary
          // divergence from the one-shot operator.
-         val hot = liveSigs(spark, storePath)
+         val hot = DurableStore.live(spark, storePath, "sigs")
            .join(broadcast(e.select("doc_id")), Seq("doc_id"), "left_anti")
            .select(col("doc_id").as("store_id"),
              explode(Dedup.shChunks(col("sh"), params.maxHamming)).as("cc"))
@@ -319,7 +321,7 @@ object IncrementalImageDedup {
           .select(explode(array(col("id_a"), col("id_b"))).as("doc_id"))
           .distinct()
         e.unionByName(
-          liveSigs(spark, storePath)
+          DurableStore.live(spark, storePath, "sigs")
             .join(candidateIds, Seq("doc_id"), "left_semi")
             .join(e.select("doc_id"), Seq("doc_id"), "left_anti"))
       }
@@ -339,20 +341,11 @@ object IncrementalImageDedup {
     // ordering contract needs
     val out = pairs.localCheckpoint(true)
 
-    // sidecar BEFORE the sig append (coverage must never lapse — see
-    // KeyBloom: a crash in between leaves an over-approximating bloom,
-    // harmless); only while coverage holds: store born with blooms, or
-    // blooms armed by compaction. A legacy store stays bloom-less.
+    // sidecar BEFORE the sig append (see DurableStore.cover).
     // Differently-parameterized bloom dirs drop first — appending keys
     // they don't cover would break their no-false-negative guarantee.
     dropStaleBlooms(spark, storePath, params.maxHamming)
-    if (!storeExists || StoreTombstones.hasData(spark, bDir)) {
-      val hashes = batchKeys.select("__kh")
-      val n = hashes.count()
-      if (n > 0)
-        KeyBloom.writeSidecar(spark, bDir,
-          KeyBloom.build(spark, hashes, n, params.bitsPerKey), n)
-    }
+    DurableStore.cover(spark, coverage, storeExists, batchKeys.select("__kh"))
     if (!storeExists) {
       // marker BEFORE the first sig write: a crash in between leaves a
       // marker with no sigs (next ingest re-creates both), never sigs
@@ -368,32 +361,17 @@ object IncrementalImageDedup {
     out
   }
 
-  /** The live probe/verify surface: registered signatures minus any
-    * whose owner was forgotten — tombstones broadcast into an
-    * anti-join along the single store scan.
-    */
-  private def liveSigs(spark: SparkSession, storePath: String): DataFrame = {
-    val sigs = graft.sinks.StoreRead.parquet(spark, s"$storePath/sigs")
-    val fPath = s"$storePath/forgotten"
-    if (!StoreTombstones.hasData(spark, fPath)) sigs
-    else sigs.join(broadcast(graft.sinks.StoreRead.parquet(spark, fPath)),
-      Seq("doc_id"), "left_anti")
-  }
-
   /** Takedown support: forget these owners' signatures — an O(takedown)
     * tombstone append; probes mask immediately, `compactStore` erases
     * physically. Fresh copies of forgotten images are admitted again
     * under a new id. `ids` must carry a `doc_id` column.
     */
   def forget(spark: SparkSession, storePath: String, ids: DataFrame): Unit =
-    ids.select("doc_id").write.mode("append")
-      .parquet(s"$storePath/forgotten")
+    DurableStore.forget(storePath, ids.select("doc_id"))
 
   /** Stored image count (distinct registered ids). */
   def storedDocs(spark: SparkSession, storePath: String): Long =
-    if (!exists(spark, s"$storePath/sigs")) 0L
-    else graft.sinks.StoreRead.parquet(spark, s"$storePath/sigs")
-      .select("doc_id").distinct().count()
+    DurableStore.count(spark, s"$storePath/sigs", Seq("doc_id"))
 
   /** Compact the signature table and fold the takedown tombstones —
     * forgotten signatures are physically erased and `forgotten/`
@@ -408,17 +386,8 @@ object IncrementalImageDedup {
       storePath: String,
       targetFileBytes: Long = 128L * 1024 * 1024,
       params: Params = Params()): (Int, Int) = {
-    val counts = StoreTombstones.foldAndCompact(spark, s"$storePath/forgotten",
-      Seq(s"$storePath/sigs"), targetFileBytes)
     dropStaleBlooms(spark, storePath, params.maxHamming)
-    if (exists(spark, s"$storePath/sigs")) {
-      val keys = graft.sinks.StoreRead.parquet(spark, s"$storePath/sigs")
-        .select(explode(Dedup.shChunks(col("sh"), params.maxHamming)).as("cc"))
-        .select(xxhash64(col("cc.chunk"), col("cc.cval")).as("__kh"))
-        .distinct()
-      KeyBloom.rebuild(spark, bloomDir(storePath, params.maxHamming), keys,
-        keys.count(), params.bitsPerKey, params.maxBloomBytes)
-    }
-    counts
+    DurableStore.compact(spark, storePath, Seq("sigs"), targetFileBytes,
+      Some(bloom(storePath, params)))
   }
 }

@@ -1,6 +1,5 @@
 package graft.ext
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -66,31 +65,11 @@ import org.apache.spark.sql.functions._
   */
 object IncrementalKeyedDedup {
 
-  /** True only when the store holds COMMITTED parquet files (a crashed
-    * append's `_temporary` dir alone must read as "no store yet").
-    */
-  private def exists(spark: SparkSession, path: String): Boolean = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(p) && fs.listStatus(p).exists { f =>
-      val n = f.getPath.getName
-      f.isFile && n.endsWith(".parquet") && !n.startsWith("_") &&
-        !n.startsWith(".")
-    }
-  }
-
-  /** The live store: registered keys minus any whose OWNER was
-    * forgotten (takedown tombstones, see [[forget]]); the tombstone set
-    * is takedown-sized, so it broadcasts into the same store scan.
-    */
-  private def liveStore(
-      spark: SparkSession, storePath: String, idCol: String): DataFrame = {
-    val keys = graft.sinks.StoreRead.parquet(spark, s"$storePath/keys")
-    val fPath = s"$storePath/forgotten"
-    if (!exists(spark, fPath)) keys
-    else keys.join(broadcast(graft.sinks.StoreRead.parquet(spark, fPath)),
-      Seq(idCol), "left_anti")
-  }
+  /** The store's bloom coverage over its registered key hashes. */
+  private def bloom(storePath: String, bitsPerKey: Int = 16,
+      maxBloomBytes: Long = 256L * 1024 * 1024) =
+    DurableStore.Bloom(s"$storePath/bloom", s"$storePath/keys",
+      _.select("key_hash"), bitsPerKey, maxBloomBytes)
 
   /** Store rows (key_hash, owner id) colliding with the batch's key set
     * — ONE unshuffled store scan, batch keys broadcast. Exposed for
@@ -114,8 +93,8 @@ object IncrementalKeyedDedup {
       bitsPerKey: Int = 16,
       maxBloomBytes: Long = 256L * 1024 * 1024): DataFrame = {
     val keysPath = s"$storePath/keys"
-    val bloomPath = s"$storePath/bloom"
-    val storeExisted = exists(spark, keysPath)
+    val coverage = bloom(storePath, bitsPerKey, maxBloomBytes)
+    val storeExisted = DurableStore.hasData(spark, keysPath)
     val hashed = batch.withColumn("_kh", xxhash64(key))
       .withColumn("_kn", key.isNull)
     val keyless = hashed.filter(col("_kn"))
@@ -138,23 +117,15 @@ object IncrementalKeyedDedup {
         // (no false negatives) and need no store consult — their _owner
         // comes out null from the left_outer join below either way, so
         // the pruning is invisible to results
-        val probeKeys = {
-          val all = batchFirst.select("key_hash").distinct()
-          KeyBloom.loadSidecars(spark, bloomPath, maxBloomBytes) match {
-            case None => all
-            case Some(blooms) =>
-              val bc = spark.sparkContext.broadcast(blooms)
-              val mightCollide = udf((kh: Long) =>
-                bc.value.exists(_.contains(kh)))
-              all.filter(mightCollide(col("key_hash")))
-          }
-        }
+        val probeKeys = DurableStore.mightCollide(spark, coverage,
+          batchFirst.select("key_hash").distinct(), col("key_hash"))
         if (probeKeys.isEmpty) // whole batch proven new: no store scan
           batchFirst.withColumn("_owner",
             lit(null).cast(batchFirst.schema(idCol).dataType))
         else {
-          val owners = collisionsOf(liveStore(spark, storePath, idCol),
-              probeKeys)
+          // the live store: forgotten owners' keys stop blocking
+          val owners = collisionsOf(
+              DurableStore.live(spark, storePath, "keys", idCol), probeKeys)
             .groupBy("key_hash").agg(min(col(idCol)).as("_owner"))
           batchFirst.join(broadcast(owners), Seq("key_hash"), "left_outer")
         }
@@ -163,18 +134,8 @@ object IncrementalKeyedDedup {
       .filter(col("_owner").isNull || col("_owner") === col(idCol))
       .localCheckpoint(true)
     val newKeys = mat.filter(col("_owner").isNull).select("key_hash", idCol)
-    // sidecar BEFORE keys: a crash between the two leaves a bloom that
-    // over-approximates (harmless); the reverse order could leave
-    // committed keys no sidecar covers — a future false "proven absent".
-    // Only written while coverage holds: store born with blooms, or
-    // blooms re-armed by compaction; a legacy store stays bloom-less.
-    if (!storeExisted || StoreTombstones.hasData(spark, bloomPath)) {
-      val nNew = newKeys.count()
-      if (nNew > 0)
-        KeyBloom.writeSidecar(spark, bloomPath,
-          KeyBloom.build(spark, newKeys.select("key_hash"), nNew, bitsPerKey),
-          nNew)
-    }
+    // sidecar BEFORE keys (see DurableStore.cover)
+    DurableStore.cover(spark, coverage, storeExisted, newKeys.select("key_hash"))
     // register only keys NEW to the store — an already-mine row is its
     // own registration, and re-appending it would duplicate the key
     graft.sinks.WriteLayout.sizedForWrite(newKeys)
@@ -194,41 +155,26 @@ object IncrementalKeyedDedup {
     * the store's id column.
     */
   def forget(spark: SparkSession, storePath: String, ids: DataFrame): Unit =
-    ids.write.mode("append").parquet(s"$storePath/forgotten")
+    DurableStore.forget(storePath, ids)
 
   /** Registered key count — store health/monitoring. */
   def storedKeys(spark: SparkSession, storePath: String): Long =
-    if (!exists(spark, s"$storePath/keys")) 0L
-    else graft.sinks.StoreRead.parquet(spark, s"$storePath/keys").count()
+    DurableStore.count(spark, s"$storePath/keys")
 
   /** Compact the store's accumulated per-ingest file sets (one set per
     * batch — thousands of small files at daily cadence; every probe's
     * store scan pays per-file costs) AND fold the takedown tombstones:
     * the rewrite drops every key row whose owner is in `forgotten/`,
     * then clears the tombstone set — physically erasing what [[forget]]
-    * only masked, and re-bounding `liveStore`'s broadcast anti-join
-    * (which otherwise grows with every takedown forever). The tombstone
-    * dir is cleared LAST: a crash after the keys rewrite but before the
-    * clear just anti-joins already-absent owners — probes stay correct
-    * through every window. Returns (files before, after).
+    * only masked — and re-arms one bloom sidecar over the live keys (see
+    * [[DurableStore.compact]]). Returns (files before, after).
     */
   def compactStore(
       spark: SparkSession,
       storePath: String,
       targetFileBytes: Long = 128L * 1024 * 1024,
       bitsPerKey: Int = 16,
-      maxBloomBytes: Long = 256L * 1024 * 1024): (Int, Int) = {
-    val counts = StoreTombstones.foldAndCompact(spark, s"$storePath/forgotten",
-      Seq(s"$storePath/keys"), targetFileBytes)
-    // re-arm (or first-arm, for a legacy store) the bloom sidecars: one
-    // right-sized bloom over the now-live keys — forgotten owners drop
-    // out of the bloom here too, and per-ingest sidecar accumulation
-    // resets to a single probe per key
-    if (exists(spark, s"$storePath/keys")) {
-      val keys = graft.sinks.StoreRead.parquet(spark, s"$storePath/keys").select("key_hash")
-      KeyBloom.rebuild(spark, s"$storePath/bloom", keys, keys.count(),
-        bitsPerKey, maxBloomBytes)
-    }
-    counts
-  }
+      maxBloomBytes: Long = 256L * 1024 * 1024): (Int, Int) =
+    DurableStore.compact(spark, storePath, Seq("keys"), targetFileBytes,
+      Some(bloom(storePath, bitsPerKey, maxBloomBytes)))
 }

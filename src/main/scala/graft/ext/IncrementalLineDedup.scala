@@ -1,6 +1,5 @@
 package graft.ext
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -50,21 +49,11 @@ import org.apache.spark.sql.functions._
   */
 object IncrementalLineDedup {
 
-  /** True only when the store holds COMMITTED parquet files: a crashed
-    * first append leaves `lines/_temporary/` with no data files, and a
-    * bare-directory check would send the rerun's probe into
-    * `read.parquet` → UNABLE_TO_INFER_SCHEMA — permanently wedging the
-    * store instead of converging as documented.
-    */
-  private def exists(spark: SparkSession, path: String): Boolean = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(p) && fs.listStatus(p).exists { f =>
-      val n = f.getPath.getName
-      f.isFile && n.endsWith(".parquet") && !n.startsWith("_") &&
-        !n.startsWith(".")
-    }
-  }
+  /** The store's bloom coverage over its registered line hashes. */
+  private def bloom(storePath: String, bitsPerKey: Int = 16,
+      maxBloomBytes: Long = 256L * 1024 * 1024) =
+    DurableStore.Bloom(s"$storePath/bloom", s"$storePath/lines",
+      _.select("line_hash").distinct(), bitsPerKey, maxBloomBytes)
 
   /** PURE probe: the batch's surviving lines — first-in-batch and new
     * to the committed store — as (line_hash, id, line_no, line), with
@@ -83,26 +72,19 @@ object IncrementalLineDedup {
     val linesPath = s"$storePath/lines"
     val batchFirst = LineDedup.dedupLines(batch, idCol, textCol, sepRegex)
       .withColumn("line_hash", xxhash64(col("line")))
-    if (!exists(spark, linesPath)) batchFirst
+    if (!DurableStore.hasData(spark, linesPath)) batchFirst
     else {
-      // bloom prefilter (see KeyBloom): hashes every sidecar rejects are
-      // PROVEN absent and cannot produce a collision — pruning them from
-      // the probe set leaves the anti-join below bit-identical, and a
-      // batch of entirely-new lines skips the store scan outright
-      val probeHashes = {
-        val all = batchFirst.select("line_hash").distinct()
-        KeyBloom.loadSidecars(spark, s"$storePath/bloom", maxBloomBytes) match {
-          case None => all
-          case Some(blooms) =>
-            val bc = spark.sparkContext.broadcast(blooms)
-            val mightCollide = udf((h: Long) => bc.value.exists(_.contains(h)))
-            all.filter(mightCollide(col("line_hash")))
-        }
-      }
+      // bloom prefilter: pruning proven-absent hashes leaves the
+      // anti-join below bit-identical, and a batch of entirely-new
+      // lines skips the store scan outright
+      val probeHashes = DurableStore.mightCollide(spark,
+        bloom(storePath, maxBloomBytes = maxBloomBytes),
+        batchFirst.select("line_hash").distinct(), col("line_hash"))
       if (probeHashes.isEmpty) batchFirst
       else {
-        val collisions = collisionsOf(liveStore(spark, storePath, idCol),
-          probeHashes)
+        // the live store: forgotten owners' lines stop blocking
+        val collisions = collisionsOf(
+          DurableStore.live(spark, storePath, "lines", idCol), probeHashes)
         batchFirst.join(broadcast(collisions), Seq("line_hash"), "left_anti")
       }
     }
@@ -117,7 +99,7 @@ object IncrementalLineDedup {
     * store's id column.
     */
   def forget(spark: SparkSession, storePath: String, ids: DataFrame): Unit =
-    ids.write.mode("append").parquet(s"$storePath/forgotten")
+    DurableStore.forget(storePath, ids)
 
   /** Register a probe result in the store. Rows must be store-disjoint
     * — true BY CONSTRUCTION for a `probe` result computed against the
@@ -131,18 +113,9 @@ object IncrementalLineDedup {
       storePath: String,
       bitsPerKey: Int = 16): Unit = {
     val linesPath = s"$storePath/lines"
-    val bloomPath = s"$storePath/bloom"
-    // sidecar BEFORE the line append (coverage must never lapse — see
-    // KeyBloom); only while coverage holds: store born with blooms, or
-    // blooms armed by compaction. A legacy store stays bloom-less.
-    if (!exists(spark, linesPath) ||
-        StoreTombstones.hasData(spark, bloomPath)) {
-      val hashes = survivors.select("line_hash")
-      val n = hashes.count()
-      if (n > 0)
-        KeyBloom.writeSidecar(spark, bloomPath,
-          KeyBloom.build(spark, hashes, n, bitsPerKey), n)
-    }
+    // sidecar BEFORE the line append (see DurableStore.cover)
+    DurableStore.cover(spark, bloom(storePath, bitsPerKey),
+      DurableStore.hasData(spark, linesPath), survivors.select("line_hash"))
     graft.sinks.WriteLayout.sizedForWrite(
         survivors.select(col("line_hash"), col(idCol), col("line_no")))
       .write.mode("append").parquet(linesPath)
@@ -168,20 +141,6 @@ object IncrementalLineDedup {
     mat.select(col(idCol), col("line_no"), col("line"))
   }
 
-  /** The live store: registered lines minus any whose OWNER was
-    * forgotten (takedown tombstones, see [[forget]]). The tombstone set
-    * is takedown-sized (tiny), so it broadcasts into an anti-join along
-    * the same single store scan.
-    */
-  private def liveStore(
-      spark: SparkSession, storePath: String, idCol: String): DataFrame = {
-    val lines = graft.sinks.StoreRead.parquet(spark, s"$storePath/lines")
-    val fPath = s"$storePath/forgotten"
-    if (!exists(spark, fPath)) lines
-    else lines.join(broadcast(graft.sinks.StoreRead.parquet(spark, fPath)),
-      Seq(idCol), "left_anti")
-  }
-
   /** Store hashes colliding with the batch's key set: the store is
     * scanned ONCE and never shuffled — the batch keys broadcast into a
     * semi-join, and the surviving collision set is batch-bounded.
@@ -195,37 +154,25 @@ object IncrementalLineDedup {
 
   /** Registered line count — store health/monitoring. */
   def storedLines(spark: SparkSession, storePath: String): Long =
-    if (!exists(spark, s"$storePath/lines")) 0L
-    else graft.sinks.StoreRead.parquet(spark, s"$storePath/lines").count()
+    DurableStore.count(spark, s"$storePath/lines")
 
   /** Compact the store's accumulated per-ingest file sets (daily
     * cadence writes one set per batch — thousands of small files in a
     * year, and every probe's store scan pays the file-listing and
     * per-file open cost) AND fold the takedown tombstones: the rewrite
     * drops every line row owned by a forgotten id, then clears
-    * `forgotten/` — physically erasing what [[forget]] only masked and
-    * re-bounding `liveStore`'s broadcast anti-join (see
-    * [[StoreTombstones]] for the crash ordering). Returns (files
-    * before, files after). Safe between ingests; same maintenance
-    * contract as the sibling stores.
+    * `forgotten/` — physically erasing what [[forget]] only masked — and
+    * re-arms one bloom sidecar over the live line hashes (see
+    * [[DurableStore.compact]]). Returns (files before, files after).
+    * Safe between ingests; same maintenance contract as the sibling
+    * stores.
     */
   def compactStore(
       spark: SparkSession,
       storePath: String,
       targetFileBytes: Long = 128L * 1024 * 1024,
       bitsPerKey: Int = 16,
-      maxBloomBytes: Long = 256L * 1024 * 1024): (Int, Int) = {
-    val counts = StoreTombstones.foldAndCompact(spark, s"$storePath/forgotten",
-      Seq(s"$storePath/lines"), targetFileBytes)
-    // re-arm (or first-arm, for a legacy store) the bloom sidecars over
-    // the now-live line hashes; forgotten owners drop out of the bloom
-    // here too (see KeyBloom.rebuild for the over-budget/crash behavior)
-    if (exists(spark, s"$storePath/lines")) {
-      val hashes = graft.sinks.StoreRead.parquet(spark, s"$storePath/lines")
-        .select("line_hash").distinct()
-      KeyBloom.rebuild(spark, s"$storePath/bloom", hashes, hashes.count(),
-        bitsPerKey, maxBloomBytes)
-    }
-    counts
-  }
+      maxBloomBytes: Long = 256L * 1024 * 1024): (Int, Int) =
+    DurableStore.compact(spark, storePath, Seq("lines"), targetFileBytes,
+      Some(bloom(storePath, bitsPerKey, maxBloomBytes)))
 }

@@ -1,6 +1,5 @@
 package graft.ext
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.sinks.UpsertIgnore
@@ -30,11 +29,6 @@ import graft.sinks.UpsertIgnore
   */
 object IncrementalSubstring {
 
-  private def exists(spark: SparkSession, path: String): Boolean = {
-    val p = new Path(path)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
-
   /** Ingest a batch: returns the verbatim >=minLen-char span pairs the
     * batch introduces — (id_a, id_b), new-vs-stored and new-vs-new —
     * then registers the batch's fingerprints and gram sets. Documents
@@ -54,7 +48,7 @@ object IncrementalSubstring {
       s"minLen must be >= window + 1, got minLen=$minLen window=$window")
     val fpsPath = s"$storePath/fps"
     val gramsPath = s"$storePath/grams"
-    val storeExists = exists(spark, fpsPath)
+    val storeExists = DurableStore.hasData(spark, fpsPath)
     val g = minLen - window + 1
 
     val eligible = batch.filter(length(col(textCol)) >= minLen)
@@ -85,8 +79,10 @@ object IncrementalSubstring {
       (if (!storeExists) inBatch
        else {
          // ONE store scan, batch fingerprint keys broadcast — the store
-         // side never shuffles (the IncrementalDedup.probeHot shape)
-         val hot = liveFps(spark, storePath)
+         // side never shuffles (the IncrementalDedup.probeHot shape); the
+         // live surface keeps a forgotten doc out of every pair (its gram
+         // sets, pruned by candidate id, are never read)
+         val hot = DurableStore.live(spark, storePath, "fps")
            .join(broadcast(fps.select("fp").distinct()), Seq("fp"), "left_semi")
            .localCheckpoint(false)
          val hotOk = hot.join(
@@ -149,21 +145,6 @@ object IncrementalSubstring {
     out
   }
 
-  /** The live probe surface: registered fingerprints minus any whose
-    * OWNER was forgotten (takedown tombstones, see [[forget]]) — the
-    * tombstone set broadcasts into an anti-join along the same single
-    * store scan. Candidates derive from this view, so a forgotten doc
-    * can neither block a new copy nor appear in a pair (its gram sets —
-    * pruned by candidate id — are never read).
-    */
-  private def liveFps(spark: SparkSession, storePath: String): DataFrame = {
-    val fps = graft.sinks.StoreRead.parquet(spark, s"$storePath/fps")
-    val fPath = s"$storePath/forgotten"
-    if (!StoreTombstones.hasData(spark, fPath)) fps
-    else fps.join(broadcast(graft.sinks.StoreRead.parquet(spark, fPath)),
-      Seq("doc_id"), "left_anti")
-  }
-
   /** Takedown support: forget every fingerprint and gram set OWNED by
     * these ids — appends a tombstone set the probes anti-join (no store
     * rewrite; `compactStore` later erases the rows physically). Fresh
@@ -173,18 +154,16 @@ object IncrementalSubstring {
     * the masked rows). `ids` must carry a `doc_id` column.
     */
   def forget(spark: SparkSession, storePath: String, ids: DataFrame): Unit =
-    ids.select("doc_id").write.mode("append")
-      .parquet(s"$storePath/forgotten")
+    DurableStore.forget(storePath, ids.select("doc_id"))
 
   /** Stored doc count (distinct registered documents). */
   def storedDocs(spark: SparkSession, storePath: String): Long =
-    if (!exists(spark, s"$storePath/grams")) 0L
-    else graft.sinks.StoreRead.parquet(spark, s"$storePath/grams").count()
+    DurableStore.count(spark, s"$storePath/grams")
 
   /** Compact both store tables — per-ingest file sets accumulate at the
     * same daily cadence as the sibling stores — AND fold the takedown
     * tombstones: forgotten owners' fingerprints and gram sets are
-    * physically erased and `forgotten/` cleared (see [[StoreTombstones]]
+    * physically erased and `forgotten/` cleared (see [[DurableStore]]
     * for the crash ordering). Single-writer contract; returns
     * (filesBefore, filesAfter) summed over both tables.
     */
@@ -192,6 +171,6 @@ object IncrementalSubstring {
       spark: SparkSession,
       storePath: String,
       targetFileBytes: Long = 128L * 1024 * 1024): (Int, Int) =
-    StoreTombstones.foldAndCompact(spark, s"$storePath/forgotten",
-      Seq(s"$storePath/fps", s"$storePath/grams"), targetFileBytes)
+    DurableStore.compact(spark, storePath, Seq("fps", "grams"),
+      targetFileBytes)
 }

@@ -165,7 +165,7 @@ object KeyBloom {
       spark: SparkSession,
       bloomDir: String,
       maxBloomBytes: Long): Option[(Seq[KeyBloom], Long)] = {
-    if (!StoreTombstones.hasData(spark, bloomDir)) return None
+    if (!DurableStore.hasData(spark, bloomDir)) return None
     val rows = graft.sinks.StoreRead.parquet(spark, bloomDir)
       .select("num_bits", "num_hashes", "bits", "n_keys").collect()
     val blooms = rows.toSeq.map {

@@ -1,6 +1,5 @@
 package graft.ext
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.sinks.UpsertIgnore
@@ -30,7 +29,7 @@ import graft.sinks.UpsertIgnore
   * double-registers (keyed appendAbsent). Pairs materialize BEFORE the
   * store mutates.
   */
-private[ext] object LandmarkStore {
+private[graft] object LandmarkStore {
 
   /** Shared-count pairs over a `(doc_id, fp)` landmark frame —
     * (id_a, id_b, shared), id_a < id_b, hub hashes past `maxBucket`
@@ -53,7 +52,7 @@ private[ext] object LandmarkStore {
   def ingest(spark: SparkSession, fps0: DataFrame, storePath: String,
       minShared: Int, maxBucket: Int): DataFrame = {
     val fpsPath = s"$storePath/fps"
-    val storeExists = exists(spark, fpsPath)
+    val storeExists = DurableStore.hasData(spark, fpsPath)
     val fps = fps0
       .dropDuplicates("doc_id", "fp")
       .localCheckpoint(false) // probe, in-batch pairs, registration
@@ -126,34 +125,21 @@ private[ext] object LandmarkStore {
     out
   }
 
-  private def exists(spark: SparkSession, path: String): Boolean = {
-    val p = new Path(path)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
-
   /** The live probe surface: registered landmarks minus any whose
-    * owner was forgotten — tombstones broadcast into an anti-join
-    * along the single store scan.
+    * owner was forgotten.
     */
-  def liveFps(spark: SparkSession, storePath: String): DataFrame = {
-    val fps = graft.sinks.StoreRead.parquet(spark, s"$storePath/fps")
-    val fPath = s"$storePath/forgotten"
-    if (!StoreTombstones.hasData(spark, fPath)) fps
-    else fps.join(broadcast(graft.sinks.StoreRead.parquet(spark, fPath)),
-      Seq("doc_id"), "left_anti")
-  }
+  def liveFps(spark: SparkSession, storePath: String): DataFrame =
+    DurableStore.live(spark, storePath, "fps")
 
   /** Takedown: forget these owners' landmarks (O(takedown) tombstone
     * append; probes mask immediately, [[compactStore]] erases
     * physically). Fresh copies are admitted again under a new id.
     */
   def forget(spark: SparkSession, storePath: String, ids: DataFrame): Unit =
-    ids.select("doc_id").write.mode("append")
-      .parquet(s"$storePath/forgotten")
+    DurableStore.forget(storePath, ids.select("doc_id"))
 
   /** Fold tombstones and compact; returns (filesBefore, filesAfter). */
   def compactStore(spark: SparkSession, storePath: String,
       targetFileBytes: Long = 128L * 1024 * 1024): (Int, Int) =
-    StoreTombstones.foldAndCompact(spark, s"$storePath/forgotten",
-      Seq(s"$storePath/fps"), targetFileBytes)
+    DurableStore.compact(spark, storePath, Seq("fps"), targetFileBytes)
 }

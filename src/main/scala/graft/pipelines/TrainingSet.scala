@@ -544,7 +544,7 @@ object TrainingSet {
     // pipeline's idCol (their ingest normalizes); the keyed URL store
     // keeps the caller's column name
     val tomb = ids.toDF("doc_id")
-    def has(p: String) = graft.ext.StoreTombstones.hasData(spark, p)
+    def has(p: String) = graft.ext.DurableStore.hasData(spark, p)
     if (has(s"$storePath/bands"))
       IncrementalDedup.forget(spark, storePath, tomb)
     if (has(s"$storePath/substr/fps"))
@@ -555,17 +555,11 @@ object TrainingSet {
     imageStorePath.filter(p => has(s"$p/sigs")).foreach { p =>
       graft.ext.IncrementalImageDedup.forget(spark, p, tomb)
     }
-    animStorePath.filter(p => has(s"$p/fps")).foreach { p =>
-      graft.ext.AnimDedup.forget(spark, p, tomb)
+    (animStorePath ++ audioStorePath).filter(p => has(s"$p/fps")).foreach {
+      p => graft.ext.LandmarkStore.forget(spark, p, tomb)
     }
-    audioStorePath.filter(p => has(s"$p/fps")).foreach { p =>
-      graft.ext.AudioFingerprint.forget(spark, p, tomb)
-    }
-    urlStorePath.filter(p => has(s"$p/keys")).foreach { p =>
-      graft.ext.IncrementalKeyedDedup.forget(spark, p, ids.toDF(idCol))
-    }
-    videoStorePath.filter(p => has(s"$p/keys")).foreach { p =>
-      graft.ext.IncrementalKeyedDedup.forget(spark, p, ids.toDF(idCol))
+    (urlStorePath ++ videoStorePath).filter(p => has(s"$p/keys")).foreach {
+      p => graft.ext.IncrementalKeyedDedup.forget(spark, p, ids.toDF(idCol))
     }
     // serving-side Hamming indexes built over this corpus: the
     // forgotten ids must be unfindable there too, immediately — the
@@ -607,19 +601,12 @@ object TrainingSet {
       maxFilesPerTrigger: Option[Int] = None): Seq[Report] = {
     val reports =
       new java.util.concurrent.ConcurrentLinkedQueue[(Long, Report)]()
-    val reader = spark.readStream.schema(schema)
-    val src = maxFilesPerTrigger
-      .fold(reader)(n => reader.option("maxFilesPerTrigger", n))
-      .parquet(srcDir)
-    val q = src.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        reports.add(batchId -> ingestBatch(batch, s"$deltaPrefix$batchId"))
-        ()
-      }
-      .start()
-    q.awaitTermination()
+    graft.streaming.AvailableNow.run(
+      graft.streaming.AvailableNow.parquetSource(spark, srcDir, schema,
+        maxFilesPerTrigger),
+      checkpointDir) { (batch, batchId) =>
+      reports.add(batchId -> ingestBatch(batch, s"$deltaPrefix$batchId"))
+    }
     import scala.jdk.CollectionConverters._
     reports.asScala.toSeq.sortBy(_._1).map(_._2)
   }
@@ -659,15 +646,9 @@ object TrainingSet {
       imageStorePath.map(p =>
         graft.ext.IncrementalImageDedup.compactStore(spark, p,
           targetFileBytes)) ++
-      animStorePath.map(p =>
-        graft.ext.AnimDedup.compactStore(spark, p, targetFileBytes)) ++
-      audioStorePath.map(p =>
-        graft.ext.AudioFingerprint.compactStore(spark, p,
-          targetFileBytes)) ++
-      urlStorePath.map(p =>
-        graft.ext.IncrementalKeyedDedup.compactStore(spark, p,
-          targetFileBytes)) ++
-      videoStorePath.map(p =>
+      (animStorePath ++ audioStorePath).map(p =>
+        graft.ext.LandmarkStore.compactStore(spark, p, targetFileBytes)) ++
+      (urlStorePath ++ videoStorePath).map(p =>
         graft.ext.IncrementalKeyedDedup.compactStore(spark, p,
           targetFileBytes)) ++
       imageIndexPath.filter(graft.ext.ImageIndex.exists(spark, _)).map(

@@ -5,7 +5,8 @@ import org.apache.spark.sql.types.StructType
 
 /** Schema-cached parquet reads for ENGINE-MANAGED store/artifact tables
   * (incremental dedup stores, ANN index artifacts, posting layouts,
-  * upsert targets) — the store-side twin of `Tables.load`'s footer cache.
+  * upsert targets) and for the immutable testdata tables `Tables.load`
+  * reads — the one footer-schema cache of the process.
   *
   * Every schemaless `spark.read.parquet` submits a footer-inference JOB
   * before the real scan; the store gates re-read their tables once or

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 import graft.sinks.UpsertIgnore
 
@@ -189,7 +188,7 @@ object EventIngest {
       targetPath: String,
       checkpointDir: String): Long = {
     val inserted = new java.util.concurrent.atomic.AtomicLong(0)
-    val q = readEventStream(spark, srcDir)
+    val stream = readEventStream(spark, srcDir)
       .withWatermark("ts", "20 minutes")
       // within-watermark dedup: duplicate keys are tracked only inside
       // the lateness horizon, so state is O(events per 20 minutes) — the
@@ -197,23 +196,17 @@ object EventIngest {
       // state-store leak that kills a long-running ingest. Cross-horizon
       // replays are still absorbed by the idempotent sink's anti-join.
       .dropDuplicatesWithinWatermark("event_id")
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val ntz = batch.withColumn("ts", col("ts").cast("timestamp_ntz"))
-        // No pruneCol: ts is NOT part of the key, so range-pruning the
-        // target on it could miss an existing event_id whose ts drifted
-        // (replay with corrected clock) and re-insert the key. UpsertIgnore
-        // enforces this (prunes only on key columns); stated here too so
-        // the exactly-once-per-key guarantee is visibly unconditional.
-        val r = UpsertIgnore(ntz.sparkSession, ntz, targetPath,
-          keys = Seq("event_id"))
-        inserted.addAndGet(r.inserted)
-        ()
-      }
-      .start()
-    q.awaitTermination()
+    AvailableNow.run(stream, checkpointDir) { (batch, _) =>
+      val ntz = batch.withColumn("ts", col("ts").cast("timestamp_ntz"))
+      // No pruneCol: ts is NOT part of the key, so range-pruning the
+      // target on it could miss an existing event_id whose ts drifted
+      // (replay with corrected clock) and re-insert the key. UpsertIgnore
+      // enforces this (prunes only on key columns); stated here too so
+      // the exactly-once-per-key guarantee is visibly unconditional.
+      val r = UpsertIgnore(ntz.sparkSession, ntz, targetPath,
+        keys = Seq("event_id"))
+      inserted.addAndGet(r.inserted)
+    }
     inserted.get()
   }
 }

@@ -1,14 +1,16 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
-import graft.ext.IncrementalDedup
+import org.apache.spark.sql.types._
+import graft.ext.{DurableStore, IncrementalDedup, IncrementalEmbedDedup,
+  IncrementalImageDedup, IncrementalKeyedDedup, IncrementalLineDedup,
+  IncrementalSubstring}
 
-/** [EXT §2.9 × §2.11] Continuous near-duplicate detection over a
-  * document STREAM: each micro-batch runs one `IncrementalDedup.ingest`
-  * against the durable signature store, so every arriving document is
-  * checked against the whole accumulated corpus — in O(batch +
+/** [EXT §2.9 × §2.11] Continuous dedup over a document STREAM: each
+  * micro-batch runs one ingest of a durable store (MinHash near-dup,
+  * verbatim span, embedding, image, line or key), so every arriving
+  * item is checked against the whole accumulated corpus — in O(batch +
   * collisions), never O(corpus) — and then becomes part of the corpus
   * the next batch checks against.
   *
@@ -16,16 +18,33 @@ import graft.ext.IncrementalDedup
   * the state is NOT in the streaming state store (which is sized for
   * per-key windows, not a corpus of shingle sets) but in the keyed
   * parquet store, which survives checkpoint loss and is shared with
-  * batch ingests. Crash semantics compose from the parts:
+  * batch ingests. Crash semantics compose from the parts (see
+  * [[AvailableNow]] for the replay rules):
   *
-  *  - Store registration is idempotent (UpsertIgnore keyed anti-join),
-  *    so a replayed micro-batch cannot duplicate store rows.
-  *  - A replayed batch re-emits its pairs; the pair SINK is therefore
-  *    appended per-batch with the batchId, and downstream readers
-  *    dedup on (id_a, id_b) — exactly-once EFFECT via an idempotent
-  *    consumer, the same discipline as EventIngest's keyed sink.
+  *  - Store registration is idempotent (keyed anti-join), so a replayed
+  *    micro-batch cannot duplicate store rows.
+  *  - Each batch's ingest result (pairs, or surviving rows) appends to
+  *    a log stamped with the batchId, and the log readers below dedup
+  *    it — exactly-once EFFECT via an idempotent consumer, the same
+  *    discipline as EventIngest's keyed sink. A replayed pair batch
+  *    re-emits its pairs; a replayed keyed batch re-emits the same
+  *    survivors (the owner-aware collision check).
   */
 object StreamingDedup {
+
+  /** Run-once stream of the parquet files under `srcDir`: each batch's
+    * `ingest` result appends, stamped with `batch_id`, to `logPath`.
+    * Returns the number of micro-batches run.
+    */
+  private def availableNow(spark: SparkSession, srcDir: String,
+      schema: StructType, logPath: String, checkpointDir: String,
+      maxFilesPerTrigger: Option[Int])(ingest: DataFrame => DataFrame): Long =
+    AvailableNow.run(
+      AvailableNow.parquetSource(spark, srcDir, schema, maxFilesPerTrigger),
+      checkpointDir) { (batch, batchId) =>
+      ingest(batch).withColumn("batch_id", lit(batchId))
+        .write.mode("append").parquet(logPath)
+    }
 
   /** Run-once (AvailableNow) streaming ingest: documents under `srcDir`
     * stream in, near-dup pairs append to `pairsPath`, signatures
@@ -34,246 +53,129 @@ object StreamingDedup {
   def ingestAvailableNow(
       spark: SparkSession,
       srcDir: String,
-      schema: org.apache.spark.sql.types.StructType,
+      schema: StructType,
       idCol: String,
       textCol: String,
       storePath: String,
       pairsPath: String,
       checkpointDir: String,
       params: IncrementalDedup.Params = IncrementalDedup.Params(),
-      maxFilesPerTrigger: Option[Int] = None): Long = {
-    val batches = new java.util.concurrent.atomic.AtomicLong(0)
-    val reader = spark.readStream.schema(schema)
-    val src = maxFilesPerTrigger
-      .fold(reader)(n => reader.option("maxFilesPerTrigger", n))
-      .parquet(srcDir)
-    val q = src.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val pairs = IncrementalDedup.ingest(
-          batch.sparkSession, batch, idCol, textCol, storePath, params)
-        pairs.withColumn("batch_id", lit(batchId))
-          .write.mode("append").parquet(pairsPath)
-        batches.incrementAndGet()
-        ()
-      }
-      .start()
-    q.awaitTermination()
-    batches.get()
-  }
+      maxFilesPerTrigger: Option[Int] = None): Long =
+    availableNow(spark, srcDir, schema, pairsPath, checkpointDir,
+      maxFilesPerTrigger)(b => IncrementalDedup.ingest(
+        b.sparkSession, b, idCol, textCol, storePath, params))
 
   /** The streaming form of the incremental VERBATIM-SPAN dedup
     * (`IncrementalSubstring`): each micro-batch probes and grows the
     * durable winnowed-fingerprint store, so copy-paste spans are caught
-    * across the entire accumulated stream with the same O(batch +
-    * collisions) per-batch cost and the same crash semantics as the
-    * near-dup form above (idempotent store, batchId-stamped pair log,
-    * consumer-side distinct).
+    * across the entire accumulated stream; read with [[substringPairs]].
     */
   def ingestSubstringAvailableNow(
       spark: SparkSession,
       srcDir: String,
-      schema: org.apache.spark.sql.types.StructType,
+      schema: StructType,
       idCol: String,
       textCol: String,
       storePath: String,
       pairsPath: String,
       checkpointDir: String,
       minLen: Int,
-      maxFilesPerTrigger: Option[Int] = None): Long = {
-    val batches = new java.util.concurrent.atomic.AtomicLong(0)
-    val reader = spark.readStream.schema(schema)
-    val src = maxFilesPerTrigger
-      .fold(reader)(n => reader.option("maxFilesPerTrigger", n))
-      .parquet(srcDir)
-    val q = src.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.ext.IncrementalSubstring.ingest(
-            batch.sparkSession, batch, idCol, textCol, storePath, minLen)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("append").parquet(pairsPath)
-        batches.incrementAndGet()
-        ()
-      }
-      .start()
-    q.awaitTermination()
-    batches.get()
-  }
+      maxFilesPerTrigger: Option[Int] = None): Long =
+    availableNow(spark, srcDir, schema, pairsPath, checkpointDir,
+      maxFilesPerTrigger)(b => IncrementalSubstring.ingest(
+        b.sparkSession, b, idCol, textCol, storePath, minLen))
 
   /** The streaming form of the incremental EMBEDDING near-dup
     * (`IncrementalEmbedDedup`): each micro-batch of vectors probes and
-    * grows the durable signature store — every arriving embedding is
-    * checked against the accumulated corpus in O(batch + collisions),
-    * same crash semantics as the text forms (idempotent store,
-    * batchId-stamped pair log, consumer-side distinct).
+    * grows the durable signature store; cosine pairs append to the log.
     */
   def ingestEmbeddingsAvailableNow(
       spark: SparkSession,
       srcDir: String,
-      schema: org.apache.spark.sql.types.StructType,
+      schema: StructType,
       idCol: String,
       vecCol: String,
       storePath: String,
       pairsPath: String,
       checkpointDir: String,
-      params: graft.ext.IncrementalEmbedDedup.Params =
-        graft.ext.IncrementalEmbedDedup.Params(),
-      maxFilesPerTrigger: Option[Int] = None): Long = {
-    val batches = new java.util.concurrent.atomic.AtomicLong(0)
-    val reader = spark.readStream.schema(schema)
-    val src = maxFilesPerTrigger
-      .fold(reader)(n => reader.option("maxFilesPerTrigger", n))
-      .parquet(srcDir)
-    val q = src.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.ext.IncrementalEmbedDedup.ingest(
-            batch.sparkSession, batch, idCol, vecCol, storePath, params)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("append").parquet(pairsPath)
-        batches.incrementAndGet()
-        ()
-      }
-      .start()
-    q.awaitTermination()
-    batches.get()
-  }
+      params: IncrementalEmbedDedup.Params = IncrementalEmbedDedup.Params(),
+      maxFilesPerTrigger: Option[Int] = None): Long =
+    availableNow(spark, srcDir, schema, pairsPath, checkpointDir,
+      maxFilesPerTrigger)(b => IncrementalEmbedDedup.ingest(
+        b.sparkSession, b, idCol, vecCol, storePath, params))
 
   /** The streaming form of the incremental IMAGE dedup
     * (`IncrementalImageDedup`): each micro-batch of mediaTable-shaped
     * rows (doc_id, media, width, height) probes the durable dHash
-    * store, hamming pairs append batchId-stamped, signatures register.
-    * Same crash composition as the text/embedding forms: idempotent
-    * registration, consumer-side pair dedup.
+    * store; hamming pairs append to the log.
     */
   def ingestImagesAvailableNow(
       spark: SparkSession,
       srcDir: String,
-      schema: org.apache.spark.sql.types.StructType,
+      schema: StructType,
       storePath: String,
       pairsPath: String,
       checkpointDir: String,
-      params: graft.ext.IncrementalImageDedup.Params =
-        graft.ext.IncrementalImageDedup.Params(),
-      maxFilesPerTrigger: Option[Int] = None): Long = {
-    val batches = new java.util.concurrent.atomic.AtomicLong(0)
-    val reader = spark.readStream.schema(schema)
-    val src = maxFilesPerTrigger
-      .fold(reader)(n => reader.option("maxFilesPerTrigger", n))
-      .parquet(srcDir)
-    val q = src.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.ext.IncrementalImageDedup.ingest(
-            batch.sparkSession, batch, storePath, params)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("append").parquet(pairsPath)
-        batches.incrementAndGet()
-        ()
-      }
-      .start()
-    q.awaitTermination()
-    batches.get()
-  }
+      params: IncrementalImageDedup.Params = IncrementalImageDedup.Params(),
+      maxFilesPerTrigger: Option[Int] = None): Long =
+    availableNow(spark, srcDir, schema, pairsPath, checkpointDir,
+      maxFilesPerTrigger)(b => IncrementalImageDedup.ingest(
+        b.sparkSession, b, storePath, params))
 
   /** The streaming form of the incremental LINE dedup
     * (`IncrementalLineDedup`): each micro-batch's lines are checked
     * against the durable line-hash store, the SURVIVING lines (new to
     * the corpus, first-in-batch) append to a batchId-stamped log, and
-    * their hashes register in the store. Unlike the pair forms — where
-    * a replayed batch re-emits and the consumer dedups — a replayed
-    * line batch collides entirely and emits nothing, so the LOG is
-    * written BEFORE the store registers: a crash between the two
+    * their hashes register in the store. Unlike the other forms, a
+    * replayed line batch collides entirely and emits nothing, so the
+    * LOG is written BEFORE the store registers: a crash between the two
     * replays the batch, the probe (still unregistered) re-emits the
-    * same survivors, and the log converges with duplicate rows the
-    * consumer-side distinct removes (`survivingLines`). Exactly-once
-    * EFFECT via an idempotent consumer, same discipline as the rest of
-    * this file.
+    * same survivors, and the log converges with duplicate rows
+    * [[survivingLines]] removes.
     */
   def ingestLinesAvailableNow(
       spark: SparkSession,
       srcDir: String,
-      schema: org.apache.spark.sql.types.StructType,
+      schema: StructType,
       idCol: String,
       textCol: String,
       storePath: String,
       linesPath: String,
       checkpointDir: String,
       sepRegex: String = "\n",
-      maxFilesPerTrigger: Option[Int] = None): Long = {
-    val batches = new java.util.concurrent.atomic.AtomicLong(0)
-    val reader = spark.readStream.schema(schema)
-    val src = maxFilesPerTrigger
-      .fold(reader)(n => reader.option("maxFilesPerTrigger", n))
-      .parquet(srcDir)
-    val q = src.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
-        val survivors = graft.ext.IncrementalLineDedup.probe(
-            s, batch, idCol, textCol, storePath, sepRegex)
-          .localCheckpoint(true)
-        survivors.withColumn("batch_id", lit(batchId))
-          .write.mode("append").parquet(linesPath)
-        graft.ext.IncrementalLineDedup.register(s, survivors, idCol, storePath)
-        batches.incrementAndGet()
-        ()
-      }
-      .start()
-    q.awaitTermination()
-    batches.get()
-  }
+      maxFilesPerTrigger: Option[Int] = None): Long =
+    AvailableNow.run(
+      AvailableNow.parquetSource(spark, srcDir, schema, maxFilesPerTrigger),
+      checkpointDir) { (batch, batchId) =>
+      val s = batch.sparkSession
+      val survivors = IncrementalLineDedup.probe(
+          s, batch, idCol, textCol, storePath, sepRegex)
+        .localCheckpoint(true)
+      survivors.withColumn("batch_id", lit(batchId))
+        .write.mode("append").parquet(linesPath)
+      IncrementalLineDedup.register(s, survivors, idCol, storePath)
+    }
 
   /** The streaming form of the incremental KEYED dedup
-    * (`IncrementalKeyedDedup`) — URL dedup is THE crawl-cadence
-    * operator, so the keyed store gets the same AvailableNow twin as
-    * every other durable store here. Each micro-batch's rows are
-    * deduped on `key` against the durable key store; the SURVIVORS
-    * (new key, first-in-batch, or the row's own earlier registration,
-    * plus every null-key row) append to a batchId-stamped log and the
-    * new keys register. Crash semantics: the keyed ingest's collision
-    * check is OWNER-AWARE, so a replayed micro-batch re-emits the SAME
-    * survivors (never an empty frame that loses the batch) — the log
-    * converges with duplicate rows the consumer-side distinct removes
-    * (`keyedSurvivors`). Exactly-once EFFECT via an idempotent
-    * consumer, same discipline as the rest of this file.
+    * (`IncrementalKeyedDedup`), the crawl-cadence URL dedup: each
+    * micro-batch's rows are deduped on `key` against the durable key
+    * store; the SURVIVORS (new key, first-in-batch, or the row's own
+    * earlier registration, plus every null-key row) append to the log
+    * and the new keys register. Read with [[keyedSurvivors]].
     */
   def ingestKeyedAvailableNow(
       spark: SparkSession,
       srcDir: String,
-      schema: org.apache.spark.sql.types.StructType,
+      schema: StructType,
       idCol: String,
-      key: org.apache.spark.sql.Column,
+      key: Column,
       storePath: String,
       survivorsPath: String,
       checkpointDir: String,
-      maxFilesPerTrigger: Option[Int] = None): Long = {
-    val batches = new java.util.concurrent.atomic.AtomicLong(0)
-    val reader = spark.readStream.schema(schema)
-    val src = maxFilesPerTrigger
-      .fold(reader)(n => reader.option("maxFilesPerTrigger", n))
-      .parquet(srcDir)
-    val q = src.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.ext.IncrementalKeyedDedup.ingest(
-            batch.sparkSession, batch, idCol, key, storePath)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("append").parquet(survivorsPath)
-        batches.incrementAndGet()
-        ()
-      }
-      .start()
-    q.awaitTermination()
-    batches.get()
-  }
+      maxFilesPerTrigger: Option[Int] = None): Long =
+    availableNow(spark, srcDir, schema, survivorsPath, checkpointDir,
+      maxFilesPerTrigger)(b => IncrementalKeyedDedup.ingest(
+        b.sparkSession, b, idCol, key, storePath))
 
   /** The streaming form of the VIDEO dedup: the remux-robust mdat
     * payload fingerprint (`Multimodal.videoPayloadFp` — moov relocation,
@@ -283,14 +185,12 @@ object StreamingDedup {
     * video drops cross-batch. Non-video and
     * payload-less rows key NULL and pass through untouched
     * (`IncrementalKeyedDedup`'s keyless discipline). Same crash
-    * semantics as [[ingestKeyedAvailableNow]], which this wraps:
-    * owner-aware replay re-emits the same survivors, consumer-side
-    * distinct keeps the log exactly-once in effect.
+    * semantics as [[ingestKeyedAvailableNow]], which this wraps.
     */
   def ingestVideosAvailableNow(
       spark: SparkSession,
       srcDir: String,
-      schema: org.apache.spark.sql.types.StructType,
+      schema: StructType,
       idCol: String,
       videoCol: String,
       storePath: String,
@@ -303,6 +203,15 @@ object StreamingDedup {
       storePath, survivorsPath, checkpointDir, maxFilesPerTrigger)
   }
 
+  /** `read` of the committed log at `path`, or an empty frame of
+    * `empty` before its first committed append (a crashed first append's
+    * `_temporary/` alone reads as empty too).
+    */
+  private def readLog(spark: SparkSession, path: String, empty: StructType)(
+      read: DataFrame => DataFrame): DataFrame =
+    DurableStore.read(spark, path).fold(
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], empty))(read)
+
   /** The accumulated keyed-survivors log with replay duplicates removed
     * (identical rows can recur across batch ids after a crash-replay —
     * the distinct is over the DATA columns, not batch_id). Empty
@@ -311,19 +220,11 @@ object StreamingDedup {
   def keyedSurvivors(
       spark: SparkSession,
       survivorsPath: String,
-      schema: org.apache.spark.sql.types.StructType): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(survivorsPath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p))
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else {
-      val log = graft.sinks.StoreRead.parquet(spark, survivorsPath)
+      schema: StructType): DataFrame =
+    readLog(spark, survivorsPath, schema) { log =>
       val dataCols = log.columns.filterNot(_ == "batch_id").toSeq
-      log.select(dataCols.map(org.apache.spark.sql.functions.col): _*)
-        .dropDuplicates(dataCols)
+      log.select(dataCols.map(col): _*).dropDuplicates(dataCols)
     }
-  }
 
   /** The accumulated surviving-lines log, deduped on the line hash
     * (crash-replayed batches can duplicate log rows; the consumer-side
@@ -337,41 +238,21 @@ object StreamingDedup {
       spark: SparkSession,
       linesPath: String,
       idCol: String,
-      idType: org.apache.spark.sql.types.DataType =
-        org.apache.spark.sql.types.LongType): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(linesPath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p))
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField(idCol, idType),
-          org.apache.spark.sql.types.StructField("line_no",
-            org.apache.spark.sql.types.IntegerType),
-          org.apache.spark.sql.types.StructField("line",
-            org.apache.spark.sql.types.StringType))))
-    else
-      graft.sinks.StoreRead.parquet(spark, linesPath)
-        .dropDuplicates("line_hash")
-        .select(idCol, "line_no", "line")
-  }
+      idType: DataType = LongType): DataFrame =
+    readLog(spark, linesPath, StructType(Seq(StructField(idCol, idType),
+        StructField("line_no", IntegerType), StructField("line", StringType)))) {
+      _.dropDuplicates("line_hash").select(idCol, "line_no", "line")
+    }
 
   /** The substring-pair log, deduped on the pair key (see `pairs`). */
   def substringPairs(
       spark: SparkSession,
       pairsPath: String,
-      idType: org.apache.spark.sql.types.DataType =
-        org.apache.spark.sql.types.LongType): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(pairsPath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p))
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("id_a", idType),
-          org.apache.spark.sql.types.StructField("id_b", idType))))
-    else graft.sinks.StoreRead.parquet(spark, pairsPath).select("id_a", "id_b").distinct()
-  }
+      idType: DataType = LongType): DataFrame =
+    readLog(spark, pairsPath, StructType(Seq(StructField("id_a", idType),
+        StructField("id_b", idType)))) {
+      _.select("id_a", "id_b").distinct()
+    }
 
   /** The accumulated pair log, deduped on the pair key (replayed
     * batches re-emit; the consumer-side distinct restores exactly-once
@@ -386,20 +267,9 @@ object StreamingDedup {
   def pairs(
       spark: SparkSession,
       pairsPath: String,
-      idType: org.apache.spark.sql.types.DataType =
-        org.apache.spark.sql.types.LongType): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(pairsPath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p))
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("id_a", idType),
-          org.apache.spark.sql.types.StructField("id_b", idType),
-          org.apache.spark.sql.types.StructField("jaccard",
-            org.apache.spark.sql.types.DoubleType))))
-    else
-      graft.sinks.StoreRead.parquet(spark, pairsPath)
-        .groupBy("id_a", "id_b").agg(max("jaccard").as("jaccard"))
-  }
+      idType: DataType = LongType): DataFrame =
+    readLog(spark, pairsPath, StructType(Seq(StructField("id_a", idType),
+        StructField("id_b", idType), StructField("jaccard", DoubleType)))) {
+      _.groupBy("id_a", "id_b").agg(max("jaccard").as("jaccard"))
+    }
 }

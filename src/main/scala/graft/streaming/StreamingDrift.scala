@@ -1,8 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.ops.Drift
 import graft.sinks.UpsertIgnore
@@ -48,25 +46,17 @@ object StreamingDrift {
       checkpointDir: String): Result = {
     require(refCounts.length == nBins,
       s"refCounts has ${refCounts.length} bins, expected $nBins")
-    val batches = new java.util.concurrent.atomic.AtomicLong(0)
     val maxRef = new java.util.concurrent.atomic.AtomicReference[Double](0.0)
-    val q = stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val cur = Drift.binCounts(batch, valueCol, lo, hi, nBins)
-        val psi = Drift.psiFromCounts(refCounts, cur)
-        val s = batch.sparkSession
-        import s.implicits._
-        UpsertIgnore(s,
-          Seq((batchId, cur.sum, psi)).toDF("batch_id", "n_rows", "psi"),
-          metricsPath, keys = Seq("batch_id"))
-        batches.incrementAndGet()
-        maxRef.updateAndGet(m => math.max(m, psi))
-        ()
-      }
-      .start()
-    q.awaitTermination()
-    Result(batches.get(), maxRef.get())
+    val batches = AvailableNow.run(stream, checkpointDir) { (batch, batchId) =>
+      val cur = Drift.binCounts(batch, valueCol, lo, hi, nBins)
+      val psi = Drift.psiFromCounts(refCounts, cur)
+      val s = batch.sparkSession
+      import s.implicits._
+      UpsertIgnore(s,
+        Seq((batchId, cur.sum, psi)).toDF("batch_id", "n_rows", "psi"),
+        metricsPath, keys = Seq("batch_id"))
+      maxRef.updateAndGet(m => math.max(m, psi))
+    }
+    Result(batches, maxRef.get())
   }
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.SparkSession
 import graft.sinks.IncrementalRollup
 
 /** [§2.9 × sinks] Continuous aggregate-table maintenance over a stream:
@@ -58,27 +57,16 @@ object StreamingRollup {
     require(streamId.nonEmpty && !streamId.exists(_.isWhitespace),
       s"streamId '$streamId' must be non-empty without whitespace " +
         "(it forms deltaIds)")
-    val batches = new java.util.concurrent.atomic.AtomicLong(0)
-    val reader = spark.readStream.schema(schema)
-    val src = maxFilesPerTrigger
-      .fold(reader)(n => reader.option("maxFilesPerTrigger", n))
-      .parquet(srcDir)
-    val q = src.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        IncrementalRollup(batch.sparkSession, batch, targetPath,
-          groupCols = groupCols, sumCols = sumCols,
-          partitionBy = partitionBy,
-          deltaId = Some(s"$streamId-$batchId"),
-          transactional = true,
-          distinctCols = distinctCols, quantileCols = quantileCols,
-          topkCols = topkCols)
-        batches.incrementAndGet()
-        ()
-      }
-      .start()
-    q.awaitTermination()
-    batches.get()
+    AvailableNow.run(
+      AvailableNow.parquetSource(spark, srcDir, schema, maxFilesPerTrigger),
+      checkpointDir) { (batch, batchId) =>
+      IncrementalRollup(batch.sparkSession, batch, targetPath,
+        groupCols = groupCols, sumCols = sumCols,
+        partitionBy = partitionBy,
+        deltaId = Some(s"$streamId-$batchId"),
+        transactional = true,
+        distinctCols = distinctCols, quantileCols = quantileCols,
+        topkCols = topkCols)
+    }
   }
 }

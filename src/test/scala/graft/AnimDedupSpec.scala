@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.ext.{AnimDedup, Multimodal}
+import graft.ext.{AnimDedup, LandmarkStore, Multimodal}
 
 /** The durable animation-landmark store: incremental ingest must equal
   * the one-shot `animDups` over the union (the store sibling contract
@@ -72,14 +72,14 @@ class AnimDedupSpec extends SparkSpec {
     val store = tmpDir("animstore2") + "/store"
     AnimDedup.ingest(spark, (0 until 3).map(k => (k.toLong, gifFull(k)))
       .toDF("doc_id", "media"), store)
-    AnimDedup.forget(spark, store, Seq(1L).toDF("doc_id"))
+    LandmarkStore.forget(spark, store, Seq(1L).toDF("doc_id"))
     // a fresh full copy of the forgotten animation is admitted again
     // under its new id — and pairs with NOTHING (erased content must
     // not be remembered)
     val p = pairsOf(AnimDedup.ingest(spark,
       Seq((200L, gifFull(1))).toDF("doc_id", "media"), store))
     assert(p.isEmpty, s"forgotten landmarks must not pair: $p")
-    val (fb, fa) = AnimDedup.compactStore(spark, store)
+    val (fb, fa) = LandmarkStore.compactStore(spark, store)
     assert(fb >= fa, s"$fb -> $fa")
     assert(spark.read.parquet(s"$store/fps")
         .filter(col("doc_id") === 1L).count() == 0,

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.ext.AudioFingerprint
+import graft.ext.{AudioFingerprint, LandmarkStore}
 
 /** Landmark audio fingerprints: the frozen-golden pin on the hash
   * family (cross-engine `sin()` ULP drift makes a DuckDB oracle unsafe
@@ -172,12 +172,12 @@ class AudioFingerprintSpec extends SparkSpec {
     assert(storedRows.keySet == Set(1L, 2L, 3L, 4L), s"$storedRows")
 
     // forget both copies of the recording: a fresh copy readmits
-    AudioFingerprint.forget(spark, store, Seq(1L, 3L).toDF("doc_id"))
+    LandmarkStore.forget(spark, store, Seq(1L, 3L).toDF("doc_id"))
     val p3 = AudioFingerprint.ingest(spark,
       Seq((9L, wav(20, 0.4))).toDF("doc_id", "media"), store).collect()
     assert(p3.isEmpty, s"forgotten audio still blocks: ${p3.toSeq}")
     // compaction physically erases the forgotten owners
-    AudioFingerprint.compactStore(spark, store)
+    LandmarkStore.compactStore(spark, store)
     val left = spark.read.parquet(s"$store/fps")
       .select("doc_id").distinct().as[Long].collect().toSet
     assert(left == Set(2L, 4L, 9L), s"tombstones not folded: $left")
@@ -202,7 +202,7 @@ class AudioFingerprintSpec extends SparkSpec {
     val viaStore = AudioFingerprint.audioTopKStore(spark, store, probes, k = 2)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(viaStore == got, s"store-backed search diverged: $viaStore")
-    AudioFingerprint.forget(spark, store, Seq(3L).toDF("doc_id"))
+    LandmarkStore.forget(spark, store, Seq(3L).toDF("doc_id"))
     val after = AudioFingerprint.audioTopKStore(spark, store, probes, k = 2)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(after == Set((501L, 6L)), s"taken-down doc still found: $after")

@@ -5,7 +5,8 @@ import graft.ext.{IncrementalKeyedDedup, Urls}
 
 /** Generic durable keyed keep-first: one-shot equivalence in id order,
   * replay idempotence, null-key passthrough, per-(key,id) survivor
-  * resolution, crash recovery, and the store-never-shuffled probe.
+  * resolution, and the store-never-shuffled probe (crash leftovers:
+  * StoreCrashSpec).
   */
 class IncrementalKeyedDedupSpec extends SparkSpec {
   import spark.implicits._
@@ -81,15 +82,6 @@ class IncrementalKeyedDedupSpec extends SparkSpec {
         Urls.canonicalize(col("url")), store)
     assert(ids(ing(crawl1)) === Set(1L))
     assert(ids(ing(crawl2)) === Set(12L, 13L), "re-crawl 11 must drop")
-  }
-
-  test("crashed first append (_temporary only) reruns cleanly") {
-    val store = tmpDir("inckey6") + "/store"
-    assert(new java.io.File(s"$store/keys/_temporary").mkdirs())
-    val b = Seq((1L, "x")).toDF("doc_id", "k")
-    assert(ids(IncrementalKeyedDedup.ingest(spark, b, "doc_id", col("k"), store))
-      === Set(1L))
-    assert(IncrementalKeyedDedup.storedKeys(spark, store) === 1)
   }
 
   test("forget: a forgotten owner's keys stop blocking; others still block") {

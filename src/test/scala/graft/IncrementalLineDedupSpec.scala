@@ -61,18 +61,6 @@ class IncrementalLineDedupSpec extends SparkSpec {
     assert(s2 === Set((2L, 2, "beta")), s"got $s2")
   }
 
-  test("a crashed first append (_temporary only, no data files) reruns cleanly") {
-    val store = tmpDir("inclines5") + "/store"
-    // simulate the crash artifact: the committer's temp dir exists but
-    // no parquet file was ever committed
-    val tempDir = new java.io.File(s"$store/lines/_temporary")
-    assert(tempDir.mkdirs())
-    val b = Seq((1L, "x\ny")).toDF("doc_id", "text")
-    val out = keyed(IncrementalLineDedup.ingest(spark, b, "doc_id", "text", store))
-    assert(out === Set((1L, 1, "x"), (1L, 2, "y")))
-    assert(IncrementalLineDedup.storedLines(spark, store) === 2)
-  }
-
   test("forget: a forgotten doc's lines stop blocking; others still block") {
     val store = tmpDir("inclines7") + "/store"
     IncrementalLineDedup.ingest(spark,
@@ -107,7 +95,7 @@ class IncrementalLineDedupSpec extends SparkSpec {
       Seq((2L, "stays\nother")).toDF("doc_id", "text"), "doc_id", "text", store)
     IncrementalLineDedup.forget(spark, store, Seq(Tuple1(1L)).toDF("doc_id"))
     IncrementalLineDedup.compactStore(spark, store)
-    // physically erased, tombstones cleared — liveStore's broadcast
+    // physically erased, tombstones cleared — the live view's broadcast
     // anti-join no longer grows with takedown history
     assert(spark.read.parquet(s"$store/lines")
       .filter($"doc_id" === 1L).count() === 0, "forgotten rows retained")

@@ -2,6 +2,9 @@ package graft
 
 import java.time.LocalDateTime
 
+import org.apache.spark.sql.functions.col
+
+import graft.ext.{IncrementalDedup, IncrementalKeyedDedup, IncrementalLineDedup}
 import graft.pipelines.{Alerter, Pipelines}
 import graft.sinks.UpsertIgnore
 
@@ -9,6 +12,10 @@ import graft.sinks.UpsertIgnore
   * of rows, so each job's fixed driver cost is the stage's latency; job
   * counts do not move with host load, so these pins guard that cost where
   * timings could not. Counts are under the shared `SparkSpec` session.
+  * The store-ingest pins count the ingest call alone (its registration
+  * and the eager parts of its probe), on a fresh store path, so the
+  * second ingest's count includes the first footer inference of each
+  * table it reads.
   */
 class JobBudgetSpec extends SparkSpec {
   import spark.implicits._
@@ -75,5 +82,38 @@ class JobBudgetSpec extends SparkSpec {
       s"$work/daily", s"$work/table", alerter))
     assert(r0.isEmpty && alerted)
     assert(j0 == 0, s"empty-table gate ran $j0 job(s)")
+  }
+
+  /** Jobs of a first and a second ingest into a fresh store. */
+  private def ingestJobs(first: => Any, second: => Any): (Int, Int) =
+    (jobsIn(first)._2, jobsIn(second)._2)
+
+  test("keyed store ingest: job budget of a first and a second ingest") {
+    val store = tmpDir("jbkeyed") + "/store"
+    def ingest(rows: (Long, String)*) = IncrementalKeyedDedup.ingest(spark,
+      rows.toDF("doc_id", "k"), "doc_id", col("k"), store)
+    val (j1, j2) = ingestJobs(ingest((1L, "x"), (2L, "x"), (3L, "y")),
+      ingest((4L, "y"), (5L, "z")))
+    assert((j1, j2) == ((9, 15)), s"keyed ingests: $j1, $j2 jobs")
+  }
+
+  test("line store ingest: job budget of a first and a second ingest") {
+    val store = tmpDir("jblines") + "/store"
+    def ingest(id: Long, text: String) = IncrementalLineDedup.ingest(spark,
+      Seq((id, text)).toDF("doc_id", "text"), "doc_id", "text", store)
+    val (j1, j2) = ingestJobs(ingest(1L, "a\nb"), ingest(2L, "b\nc"))
+    assert((j1, j2) == ((9, 16)), s"line ingests: $j1, $j2 jobs")
+  }
+
+  test("MinHash store ingest: job budget of a first and a second ingest") {
+    val store = tmpDir("jbminhash") + "/store"
+    // documents 2k and 2k + 1 are identical, so each ingest finds pairs
+    def ingest(lo: Int, hi: Int) = IncrementalDedup.ingest(spark,
+      (lo until hi).map { i =>
+        (i.toLong, (0 until 30).map(j => s"w${(i / 2 * 7 + j * 13) % 97}")
+          .mkString(" "))
+      }.toDF("doc_id", "text"), "doc_id", "text", store)
+    val (j1, j2) = ingestJobs(ingest(0, 100), ingest(100, 200))
+    assert((j1, j2) == ((8, 22)), s"MinHash ingests: $j1, $j2 jobs")
   }
 }

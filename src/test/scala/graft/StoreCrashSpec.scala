@@ -1,0 +1,114 @@
+package graft
+
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructType}
+
+import graft.ext._
+import graft.streaming.StreamingDedup
+
+/** What a crashed first append leaves behind: a table directory holding
+  * only the committer's `_temporary/0`, no committed data file. Every
+  * durable store must read that as "no data yet": its next ingest must
+  * equal an ingest into a fresh store, with the same stored count, and
+  * every streaming log reader must return the empty log.
+  */
+class StoreCrashSpec extends SparkSpec {
+  import spark.implicits._
+
+  private def plant(table: String): Unit =
+    assert(new java.io.File(s"$table/_temporary/0").mkdirs())
+
+  /** `n` documents of 30 words; documents 2k and 2k + 1 are identical. */
+  private def docs(n: Int) = (0 until n).map { i =>
+    (i.toLong, (0 until 30).map(j => s"w${(i / 2 * 7 + j * 13) % 97}")
+      .mkString(" "))
+  }.toDF("doc_id", "text")
+
+  // two small animations sharing frames, and a cut of the first
+  private val W = 13
+  private val H = 9
+  private def frame(k: Int, f: Int) = Array.tabulate(W * H)(p =>
+    ((p * 31 + k * 7 + f * 53) % 251).toByte)
+  private def anims = Seq(
+    (1L, Multimodal.encodeGifAnim(W, H, (0 until 5).map(frame(1, _)),
+      Array.tabulate(256 * 3)(i => (i / 3).toByte), Seq.fill(5)(6))),
+    (2L, Multimodal.encodeApng(W, H, 0, (1 until 5).map(f =>
+      Multimodal.ApngFrameSpec(frame(1, f), W, H, delayNum = 6)))))
+    .toDF("doc_id", "media")
+
+  /** A store: its tables, one ingest and its stored count. */
+  private case class Store(
+      name: String,
+      tables: Seq[String],
+      ingest: String => DataFrame,
+      stored: String => Long)
+
+  private val stores = Seq(
+    Store("MinHash", Seq("bands", "shingles"),
+      IncrementalDedup.ingest(spark, docs(60), "doc_id", "text", _),
+      IncrementalDedup.storedDocs(spark, _)),
+    Store("embedding", Seq("sigs", "vecs"),
+      IncrementalEmbedDedup.ingest(spark,
+        (0 until 40).map(i => (i.toLong,
+          Array.tabulate(16)(j => math.sin(i / 2 * 31.0 + j))))
+          .toDF("vec_id", "v"),
+        "vec_id", "v", _,
+        IncrementalEmbedDedup.Params(threshold = 0.99, maxHamming = 10)),
+      IncrementalEmbedDedup.storedDocs(spark, _)),
+    Store("image", Seq("sigs"),
+      IncrementalImageDedup.ingest(spark,
+        Multimodal.mediaTable(
+          docs(40).withColumn("n_chars", length($"text"))), _),
+      IncrementalImageDedup.storedDocs(spark, _)),
+    Store("keyed", Seq("keys"),
+      IncrementalKeyedDedup.ingest(spark,
+        Seq((1L, "x"), (2L, "x"), (3L, "y")).toDF("doc_id", "k"),
+        "doc_id", col("k"), _),
+      IncrementalKeyedDedup.storedKeys(spark, _)),
+    Store("line", Seq("lines"),
+      IncrementalLineDedup.ingest(spark,
+        Seq((1L, "x\ny"), (2L, "y\nz")).toDF("doc_id", "text"),
+        "doc_id", "text", _),
+      IncrementalLineDedup.storedLines(spark, _)),
+    Store("substring", Seq("fps", "grams"),
+      IncrementalSubstring.ingest(spark, docs(60), "doc_id", "text", _,
+        minLen = 40),
+      IncrementalSubstring.storedDocs(spark, _)),
+    Store("landmark", Seq("fps"),
+      AnimDedup.ingest(spark, anims, _),
+      p => DurableStore.count(spark, s"$p/fps")))
+
+  stores.foreach { s =>
+    test(s"crash leftover: ${s.name} store") {
+      val fresh = tmpDir("crashfresh") + "/store"
+      val want = s.ingest(fresh).collect().toSet
+      assert(want.nonEmpty, s"${s.name}: the fixture must produce rows")
+      val store = tmpDir("crashplant") + "/store"
+      s.tables.foreach(t => plant(s"$store/$t"))
+      assert(s.stored(store) === 0L)
+      val got = s.ingest(store).collect().toSet
+      assert(got === want, s"${s.name}: missing=${want -- got} extra=${got -- want}")
+      assert(s.stored(store) === s.stored(fresh))
+      assert(s.stored(store) > 0L)
+    }
+  }
+
+  private val logs = Seq[(String, String => DataFrame)](
+    "pairs" -> (StreamingDedup.pairs(spark, _)),
+    "substringPairs" -> (StreamingDedup.substringPairs(spark, _)),
+    "survivingLines" -> (StreamingDedup.survivingLines(spark, _, "doc_id")),
+    "keyedSurvivors" -> (StreamingDedup.keyedSurvivors(spark, _,
+      new StructType().add("doc_id", LongType).add("k", StringType))))
+
+  logs.foreach { case (name, read) =>
+    test(s"crash leftover: $name log reader") {
+      val empty = read(tmpDir("crashlog") + "/never")
+      val log = tmpDir("crashlog") + "/log"
+      plant(log)
+      val got = read(log)
+      assert(got.schema === empty.schema)
+      assert(got.collect().toSeq === Seq.empty[Row])
+    }
+  }
+}
