@@ -96,33 +96,27 @@ object AudioIndex {
     require(files >= 1, s"$What: files $files")
     val target = new Path(path)
     val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val staging = new Path(target.getParent, s".${target.getName}__staging")
-    if (fs.exists(staging)) fs.delete(staging, true)
-    // Pin the postings before the range shuffle: repartitionByRange's
-    // bound-sampling job executes the child plan, and the write then
-    // plans it AGAIN (r16 job log: two ~equal jobs for one build —
-    // the upstream here is the full decode+DSP fingerprint pass, the
-    // most expensive stage of the build). The lazy checkpoint
-    // materializes that pass ONCE; sampling, write, and the build_meta
-    // row count all read the cached frame. O(postings) footprint —
-    // the same size class the shuffle itself buffers.
-    val pinned = postings.select(col("fp"), col("doc_id"))
-      .localCheckpoint(false)
-    pinned
-      .repartitionByRange(files, col("fp"))
-      .sortWithinPartitions(col("fp"))
-      .write.mode("overwrite").parquet(s"$staging/postings")
-    val rows = pinned.count()
-    val out = fs.create(new Path(staging, "build_meta"), true)
-    try {
-      out.write((s"fpparams ${params.frameSize} ${params.hop} " +
-        s"${params.peaksPerFrame} ${params.fanout} ${params.windowFrames}\n" +
-        s"rows $rows\nfiles $files\n").getBytes("UTF-8"))
-      out.hsync()
-    } finally out.close()
-    graft.sinks.SwapUtil.stageAsideSwap(fs, target, staging, What,
-      dstMayBeAbsent = dstMayBeAbsent)
-    ()
+    graft.sinks.SwapUtil.replace(fs, target, What, dstMayBeAbsent) { staging =>
+      // Pin the postings before the range shuffle: repartitionByRange's
+      // bound-sampling job executes the child plan, and the write then
+      // plans it AGAIN (r16 job log: two ~equal jobs for one build —
+      // the upstream here is the full decode+DSP fingerprint pass, the
+      // most expensive stage of the build). The lazy checkpoint
+      // materializes that pass ONCE; sampling, write, and the build_meta
+      // row count all read the cached frame. O(postings) footprint —
+      // the same size class the shuffle itself buffers.
+      val pinned = postings.select(col("fp"), col("doc_id"))
+        .localCheckpoint(false)
+      pinned
+        .repartitionByRange(files, col("fp"))
+        .sortWithinPartitions(col("fp"))
+        .write.mode("overwrite").parquet(s"$staging/postings")
+      val rows = pinned.count()
+      graft.sinks.SwapUtil.writeSynced(fs, new Path(staging, "build_meta"),
+        s"fpparams ${params.frameSize} ${params.hop} " +
+          s"${params.peaksPerFrame} ${params.fanout} ${params.windowFrames}\n" +
+          s"rows $rows\nfiles $files\n")
+    }
   }
 
   /** True when a built artifact exists at `path`. */

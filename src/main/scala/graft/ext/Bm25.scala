@@ -146,9 +146,8 @@ object Bm25 {
     val meta = s"""{"n":${cRow.getLong(0)},"avgdl":$avgdl,""" +
       s""""id_col":"$idCol"}"""
     val p = new org.apache.hadoop.fs.Path(path, "_constants")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
-    try { out.write(meta.getBytes("UTF-8")); out.hsync() } finally out.close()
+    graft.sinks.SwapUtil.writeSynced(
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration), p, meta)
   }
 
   private def readConstants(spark: org.apache.spark.sql.SparkSession,

@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, col, udf}
 
-import graft.sinks.StoreRead
+import graft.sinks.{StoreRead, SwapUtil}
 
 /** The plumbing every durable dedup store shares (MinHash, embedding,
   * image, keyed, line, substring and the landmark store): each store
@@ -19,7 +19,11 @@ import graft.sinks.StoreRead
   * A crashed first append leaves only `<table>/_temporary/`; a bare
   * directory check would send the rerun's probe into a schemaless read
   * (UNABLE_TO_INFER_SCHEMA) and wedge the store, while [[hasData]] reads
-  * it as absent and the rerun converges.
+  * it as absent and the rerun converges. A compaction that crashed
+  * between its two swap renames leaves the table parked at
+  * `.<table>__old`; [[hasData]] restores it first (`SwapUtil.recoverOne`),
+  * so no ingest mistakes a parked store for an empty one and no
+  * compaction then discards the parked rows.
   *
   * Takedown: [[forget]] is an O(takedown) tombstone append. Probes read
   * [[live]], the table minus the forgotten owners (the tombstone set is
@@ -33,7 +37,8 @@ import graft.sinks.StoreRead
   * table rewrite committed. A crash after some rewrites leaves
   * tombstones that anti-join already-absent rows (a no-op), so probes
   * stay correct through every window and the next fold converges. Each
-  * table rewrite is atomic via Maintenance's stage-aside swap.
+  * table rewrite is one `SwapUtil.replace` (Maintenance.compact), healed
+  * by [[hasData]] if it crashed between its renames.
   *
   * The fold's anti-join keys are the tombstone frame's own columns (each
   * store's `forget` writes exactly its id column), so one fold serves
@@ -41,10 +46,13 @@ import graft.sinks.StoreRead
   */
 private[graft] object DurableStore {
 
-  /** True only when `path` holds COMMITTED parquet data files. */
+  /** True only when `path` holds COMMITTED parquet data files, after
+    * healing a swap that crashed between its renames.
+    */
   def hasData(spark: SparkSession, path: String): Boolean = {
     val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    SwapUtil.recoverOne(fs, p)
     fs.exists(p) && fs.listStatus(p).exists { f =>
       val n = f.getPath.getName
       f.isFile && n.endsWith(".parquet") && !n.startsWith("_") &&

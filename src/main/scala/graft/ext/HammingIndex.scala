@@ -76,31 +76,27 @@ private[ext] object HammingIndex {
         col("doc_id"), col("sh"))
     val target = new Path(path)
     val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val staging = new Path(target.getParent, s".${target.getName}__staging")
-    if (fs.exists(staging)) fs.delete(staging, true)
-    // Pin before the range shuffle (the AudioIndex.writeArtifact
-    // discipline): the bound-sampling job and the write would otherwise
-    // each execute the signature pass — for the image index that is the
-    // full pixel-decode + dHash of the corpus. One materialization
-    // serves sampling, write, and the build_meta row count.
-    val pinned = postings.localCheckpoint(false)
-    pinned
-      .repartitionByRange((maxHamming + 1) * filesPerChunk,
-        col("chunk"), col("cval"))
-      .sortWithinPartitions(col("chunk"), col("cval"))
-      .write.mode("overwrite").partitionBy("chunk")
-      .parquet(s"$staging/postings")
-    val rows = pinned.count()
-    val out = fs.create(new Path(staging, "build_meta"), true)
-    try {
-      out.write((s"maxhamming $maxHamming\nrows $rows\n" +
-        s"filesperchunk $filesPerChunk\n").getBytes("UTF-8"))
-      out.hsync()
-    } finally out.close()
-    graft.sinks.SwapUtil.stageAsideSwap(fs, target, staging, what,
-      dstMayBeAbsent = true)
-    ()
+    graft.sinks.SwapUtil.replace(fs, target, what, mayBeAbsent = true) { staging =>
+      // Pin before the range shuffle (the AudioIndex.writeArtifact
+      // discipline): the bound-sampling job and the write would otherwise
+      // each execute the signature pass — for the image index that is the
+      // full pixel-decode + dHash of the corpus. One materialization
+      // serves sampling, write, and the build_meta row count.
+      val pinned = postings.localCheckpoint(false)
+      pinned
+        .repartitionByRange((maxHamming + 1) * filesPerChunk,
+          col("chunk"), col("cval"))
+        .sortWithinPartitions(col("chunk"), col("cval"))
+        .write.mode("overwrite").partitionBy("chunk")
+        .parquet(s"$staging/postings")
+      writeMeta(fs, staging, maxHamming, pinned.count(), filesPerChunk)
+    }
   }
+
+  private def writeMeta(fs: org.apache.hadoop.fs.FileSystem, dir: Path,
+      maxHamming: Int, rows: Long, filesPerChunk: Int): Unit =
+    graft.sinks.SwapUtil.writeSynced(fs, new Path(dir, "build_meta"),
+      s"maxhamming $maxHamming\nrows $rows\nfilesperchunk $filesPerChunk\n")
 
   /** True when a built artifact exists at `path` (build_meta is staged
     * with the postings, so its presence implies the whole layout).
@@ -181,14 +177,10 @@ private[ext] object HammingIndex {
             Seq("doc_id"), "left_anti")
           .localCheckpoint(false) // sever from the dir being replaced
         if (remaining.isEmpty) fs.delete(target, true)
-        else {
-          val staging =
-            new Path(target.getParent, s".${target.getName}__staging")
-          if (fs.exists(staging)) fs.delete(staging, true)
-          remaining.coalesce(1).write.parquet(staging.toString)
-          graft.sinks.SwapUtil.stageAsideSwap(fs, target, staging,
-            s"$what tombstones", dstMayBeAbsent = true)
-        }
+        else
+          graft.sinks.SwapUtil.replace(fs, target, s"$what tombstones",
+            mayBeAbsent = true)(
+            dir => remaining.coalesce(1).write.parquet(dir.toString))
         ()
       }
     }
@@ -247,24 +239,17 @@ private[ext] object HammingIndex {
     // probe) — leave the mask in place and tell the caller to rebuild
     // or delete; probes keep returning nothing, which is correct
     if (live.isEmpty) return (before, before)
-    val staging = new Path(target.getParent, s".${target.getName}__staging")
-    if (fs.exists(staging)) fs.delete(staging, true)
-    live
-      .select(col("chunk"), col("cval"), col("doc_id"), col("sh"))
-      .repartitionByRange((maxHamming + 1) * fanout,
-        col("chunk"), col("cval"))
-      .sortWithinPartitions(col("chunk"), col("cval"))
-      .write.mode("overwrite").partitionBy("chunk")
-      .parquet(s"$staging/postings")
-    val rows = spark.read.parquet(s"$staging/postings").count()
-    val out = fs.create(new Path(staging, "build_meta"), true)
-    try {
-      out.write((s"maxhamming $maxHamming\nrows $rows\n" +
-        s"filesperchunk $fanout\n").getBytes("UTF-8"))
-      out.hsync()
-    } finally out.close()
-    graft.sinks.SwapUtil.stageAsideSwap(fs, target, staging, what,
-      dstMayBeAbsent = false)
+    graft.sinks.SwapUtil.replace(fs, target, what) { staging =>
+      live
+        .select(col("chunk"), col("cval"), col("doc_id"), col("sh"))
+        .repartitionByRange((maxHamming + 1) * fanout,
+          col("chunk"), col("cval"))
+        .sortWithinPartitions(col("chunk"), col("cval"))
+        .write.mode("overwrite").partitionBy("chunk")
+        .parquet(s"$staging/postings")
+      writeMeta(fs, staging, maxHamming,
+        spark.read.parquet(s"$staging/postings").count(), fanout)
+    }
     (before, partFileCount(fs, new Path(s"$path/postings")))
   }
 

@@ -81,10 +81,8 @@ object IncrementalDedup {
   private def writeFamily(
       spark: SparkSession, storePath: String, family: String): Unit = {
     val p = new Path(storePath, FamilyFile)
-    val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = f.create(p, true)
-    try { out.write(family.getBytes("UTF-8")); out.hsync() }
-    finally out.close()
+    graft.sinks.SwapUtil.writeSynced(
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration), p, family)
   }
 
   /** Resolve the signature family for this ingest: first ingest pins the

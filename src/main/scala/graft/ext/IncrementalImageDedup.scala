@@ -109,13 +109,9 @@ object IncrementalImageDedup {
   private def writeRegime(spark: SparkSession, storePath: String,
       params: Params): Unit = {
     val p = regimePath(storePath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
-    try {
-      out.write(s"${sigRegime(params.normalizeOrientation)}\n"
-        .getBytes("UTF-8"))
-      out.hsync()
-    } finally out.close()
+    graft.sinks.SwapUtil.writeSynced(
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration), p,
+      s"${sigRegime(params.normalizeOrientation)}\n")
   }
 
   /** Refuse to probe/append a store whose signatures came from a

@@ -475,25 +475,22 @@ object Pq {
     val token = assignmentsToken(spark, ivfPath)
     val target = new org.apache.hadoop.fs.Path(s"$ivfPath/pq")
     val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val staging = new org.apache.hadoop.fs.Path(
-      target.getParent, s".${target.getName}__staging")
-    if (fs.exists(staging)) fs.delete(staging, true)
     val bc = spark.sparkContext.broadcast(cb)
-    asg.select(col("id"), col("centroid_id"), col("n"), col("v"))
-      .as[(Long, Long, Double, Seq[Double])]
-      .mapPartitions { it =>
-        val c = bc.value
-        it.map { case (id, cid, n, v) => (id, cid, n, c.encode(v.toArray)) }
-      }
-      .toDF("id", "centroid_id", "n", "codes")
-      .write.mode("overwrite").partitionBy("centroid_id")
-      .parquet(s"$staging/codes")
-    writeCodebooks(spark, cb, s"$staging/codebooks")
-    val out = fs.create(new org.apache.hadoop.fs.Path(staging, "meta"), true)
-    try { out.write(token.getBytes("UTF-8")); out.hsync() }
-    finally out.close()
-    graft.sinks.SwapUtil.stageAsideSwap(fs, target, staging, "pq codes",
-      dstMayBeAbsent = true)
+    graft.sinks.SwapUtil.replace(fs, target, "pq codes",
+        mayBeAbsent = true) { staging =>
+      asg.select(col("id"), col("centroid_id"), col("n"), col("v"))
+        .as[(Long, Long, Double, Seq[Double])]
+        .mapPartitions { it =>
+          val c = bc.value
+          it.map { case (id, cid, n, v) => (id, cid, n, c.encode(v.toArray)) }
+        }
+        .toDF("id", "centroid_id", "n", "codes")
+        .write.mode("overwrite").partitionBy("centroid_id")
+        .parquet(s"$staging/codes")
+      writeCodebooks(spark, cb, s"$staging/codebooks")
+      graft.sinks.SwapUtil.writeSynced(fs,
+        new org.apache.hadoop.fs.Path(staging, "meta"), token)
+    }
     artifactCbCache.put((s"$ivfPath/pq", pqToken(spark, s"$ivfPath/pq")), cb)
     cb
   }
@@ -531,12 +528,10 @@ object Pq {
     */
   private[ext] def repinTo(
       spark: org.apache.spark.sql.SparkSession, ivfPath: String): Unit = {
-    val token = assignmentsToken(spark, ivfPath)
     val metaP = new org.apache.hadoop.fs.Path(s"$ivfPath/pq/meta")
-    val fs = metaP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(metaP, true)
-    try { out.write(token.getBytes("UTF-8")); out.hsync() }
-    finally out.close()
+    graft.sinks.SwapUtil.writeSynced(
+      metaP.getFileSystem(spark.sparkContext.hadoopConfiguration), metaP,
+      assignmentsToken(spark, ivfPath))
   }
 
   private def loadArtifactCodebooks(
@@ -590,13 +585,7 @@ object Pq {
     if (n > 0)
       newCodes.write.mode("append").partitionBy("centroid_id")
         .parquet(s"$pqPath/codes")
-    val fs = new org.apache.hadoop.fs.Path(pqPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(new org.apache.hadoop.fs.Path(s"$pqPath/meta"), true)
-    try {
-      out.write(assignmentsToken(spark, ivfPath).getBytes("UTF-8"))
-      out.hsync()
-    } finally out.close()
+    repinTo(spark, ivfPath)
     n
   }
 

@@ -495,24 +495,22 @@ object Similarity {
     // index (assignments present, centroids missing)
     val target = new org.apache.hadoop.fs.Path(path)
     val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val staging =
-      new org.apache.hadoop.fs.Path(target.getParent, s".${target.getName}__staging")
-    if (fs.exists(staging)) fs.delete(staging, true)
-    assignments
-      .write.mode("overwrite").partitionBy("centroid_id")
-      .parquet(s"$staging/assignments")
-    import spark.implicits._
-    cents.toSeq.map(c => (c.id, c.vec.toSeq, c.norm))
-      .toDF("id", "vec", "norm")
-      .coalesce(1).write.mode("overwrite").parquet(s"$staging/centroids")
-    // training-time row count: the staleness denominator for incremental
-    // appends (a parquet count over the just-written files is footer
-    // metadata, not a data scan); staged with the rest so the swap
-    // publishes the whole artifact atomically
-    val rows = spark.read.parquet(s"$staging/assignments").count()
-    writeBuildRows(fs, new org.apache.hadoop.fs.Path(staging, "build_meta"), rows)
-    graft.sinks.SwapUtil.stageAsideSwap(fs, target, staging, "ivf index",
-      dstMayBeAbsent = true)
+    graft.sinks.SwapUtil.replace(fs, target, "ivf index",
+        mayBeAbsent = true) { staging =>
+      assignments
+        .write.mode("overwrite").partitionBy("centroid_id")
+        .parquet(s"$staging/assignments")
+      import spark.implicits._
+      cents.toSeq.map(c => (c.id, c.vec.toSeq, c.norm))
+        .toDF("id", "vec", "norm")
+        .coalesce(1).write.mode("overwrite").parquet(s"$staging/centroids")
+      // training-time row count: the staleness denominator for
+      // incremental appends (a parquet count over the just-written files
+      // is footer metadata, not a data scan); staged with the rest so the
+      // swap publishes the whole artifact atomically
+      val rows = spark.read.parquet(s"$staging/assignments").count()
+      writeBuildRows(fs, new org.apache.hadoop.fs.Path(staging, "build_meta"), rows)
+    }
     centroidCache.put((path, centroidToken(spark, path)), cents)
     ()
   }
@@ -520,11 +518,8 @@ object Similarity {
   private def writeBuildRows(
       fs: org.apache.hadoop.fs.FileSystem,
       p: org.apache.hadoop.fs.Path,
-      rows: Long): Unit = {
-    val out = fs.create(p, true)
-    try { out.write(s"rows $rows\n".getBytes("UTF-8")); out.hsync() }
-    finally out.close()
-  }
+      rows: Long): Unit =
+    graft.sinks.SwapUtil.writeSynced(fs, p, s"rows $rows\n")
 
   private def readBuildRows(
       spark: SparkSession, path: String): Option[Long] = {
@@ -705,16 +700,14 @@ object Similarity {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     def rewriteMinusIds(dir: String, who: String): Long = {
       val target = new org.apache.hadoop.fs.Path(dir)
+      graft.sinks.SwapUtil.recoverOne(fs, target) // a parked leaf is live
       if (!fs.exists(target)) return 0L
       val cur = graft.sinks.StoreRead.parquet(spark, dir).localCheckpoint(true)
       val keep = cur.join(broadcast(idDf), Seq("id"), "left_anti")
       val removed = cur.count() -
         keep.localCheckpoint(true).count() // materialize BEFORE the swap
-      val staging = new org.apache.hadoop.fs.Path(
-        target.getParent, s".${target.getName}__staging")
-      if (fs.exists(staging)) fs.delete(staging, true)
-      keep.write.mode("overwrite").parquet(staging.toString)
-      graft.sinks.SwapUtil.stageAsideSwap(fs, target, staging, who)
+      graft.sinks.SwapUtil.replace(fs, target, who)(
+        staging => keep.write.mode("overwrite").parquet(staging.toString))
       removed
     }
     val removed = touched.map(cid =>

@@ -90,18 +90,20 @@ object Maintenance {
     *    assumes near-even partitions; a skewed-beyond-average partition
     *    still compacts, just with proportionally larger files.)
     *
-    * Returns (dataFilesBefore, dataFilesAfter). Writes via a temp sibling
-    * dir + rename swap, and every call starts with `recover(path)` so a
-    * crash between the two swap renames is healed on the next attempt.
+    * Returns (dataFilesBefore, dataFilesAfter). The rewrite commits
+    * through `SwapUtil.replace`; every call first heals the table with
+    * `SwapUtil.recoverUnder`, so a crash between the two swap renames
+    * (this compaction's or an earlier sink's) is healed before the read.
+    * So is every durable store's next read: `DurableStore.hasData`
+    * restores a parked table before reporting it absent.
     *
-    * CONTRACT — single writer, no concurrent readers during the swap.
-    * The two-rename swap is not atomic: a reader listing the path between
-    * rename(p, bak) and rename(tmp, p) sees a missing table, and a crash
-    * in that window leaves the data parked in the hidden backup until
-    * `recover` runs. On object stores directory "rename" is an O(data)
-    * copy, widening that window — there the production answer is a
-    * manifest/pointer commit (Delta/Iceberg style), which is out of scope
-    * for a plain-parquet lake; this compact is the maintenance-window tool.
+    * CONTRACT — single writer, no concurrent readers during the swap
+    * (SwapUtil's contract): a reader listing the path between the two
+    * renames sees a missing table. On object stores directory "rename"
+    * is an O(data) copy, widening that window — there the production
+    * answer is a manifest/pointer commit (Delta/Iceberg style), which is
+    * out of scope for a plain-parquet lake; this compact is the
+    * maintenance-window tool.
     */
   def compact(spark: SparkSession, path: String,
       targetFileBytes: Long = 128L * 1024 * 1024): (Int, Int) =
@@ -113,7 +115,7 @@ object Maintenance {
     * rewritten anyway, so subtracting forgotten owners there is free,
     * and it physically removes the rows a takedown only masked (the
     * right-to-erasure end state; until the fold, `forget` tombstones
-    * merely hide them from probes). Same swap/recover discipline and
+    * merely hide them from probes). Same swap/heal discipline and
     * single-writer contract as `compact`.
     */
   def compactWith(spark: SparkSession, path: String,
@@ -151,23 +153,17 @@ object Maintenance {
       shape: Option[(DataFrame, Int) => DataFrame]): (Int, Int) = {
     require(targetFileBytes >= 1024 * 1024,
       s"targetFileBytes must be >= 1 MiB, got $targetFileBytes")
-    recover(spark, path)
     val p = new Path(path)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    // heal a crashed swap (this table's or a partition leaf's) BEFORE
+    // reading: a rewrite of a crash-truncated table commits the loss
+    SwapUtil.recoverUnder(fs, p)
     val stats = tableStats(spark, path)
     val partCols = partitionColsOf(spark, path)
     val nFiles = math.max(1, math.ceil(stats.bytes.toDouble / targetFileBytes).toInt)
-    val tmp = new Path(p.getParent, s".${p.getName}__compact_tmp")
-
-    val inferKey = "spark.sql.sources.partitionColumnTypeInference.enabled"
-    val savedInfer = spark.conf.get(inferKey)
-    val base0 =
-      if (partCols.isEmpty) spark.read.parquet(path)
-      else try {
-        spark.conf.set(inferKey, "false")
-        spark.read.parquet(path)
-      } finally spark.conf.set(inferKey, savedInfer)
-    val base = transform(base0)
+    // partition values read AS STRINGS, so directory names round-trip
+    val base = transform(
+      MergeWrite.readNoInference(spark, path, partCols.nonEmpty))
 
     val df =
       if (partCols.nonEmpty) {
@@ -179,41 +175,8 @@ object Maintenance {
           else pmod(hash(dataCols: _*), lit(perValueFiles))
         base.repartition(nFiles, (partCols.map(col) :+ salt): _*)
       } else shape.fold(base.repartition(nFiles))(s => s(base, nFiles))
-    val w = df.write.mode(SaveMode.Overwrite)
-    (if (partCols.nonEmpty) w.partitionBy(partCols: _*) else w).parquet(tmp.toString)
-
-    val bak = new Path(p.getParent, s".${p.getName}__compact_old")
-    if (fs.exists(bak)) fs.delete(bak, true)
-    if (!fs.rename(p, bak)) sys.error(s"compact: cannot stage $path aside")
-    if (!fs.rename(tmp, p)) { fs.rename(bak, p); sys.error(s"compact: swap failed for $path") }
-    fs.delete(bak, true)
+    SwapUtil.replace(fs, p, "compact")(MergeWrite.writeTo(df, partCols))
     (stats.files, dataFileCount(spark, path))
-  }
-
-  /** Heal a table whose previous compact crashed mid-swap: if the table
-    * path is MISSING but the staged-aside backup exists, rename the backup
-    * back into place; stale rewrite temp dirs are dropped either way (the
-    * next compact rewrites from the restored table). Idempotent and safe
-    * to call at startup or before any read of a compact-managed table;
-    * compact itself calls it first. Returns true when a restore happened.
-    *
-    * When BOTH the table and the backup exist, the crash happened after
-    * the forward swap succeeded (or delete(bak) failed) — the live table
-    * is the newer, complete rewrite, so the backup is simply discarded.
-    */
-  def recover(spark: SparkSession, path: String): Boolean = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val bak = new Path(p.getParent, s".${p.getName}__compact_old")
-    val tmp = new Path(p.getParent, s".${p.getName}__compact_tmp")
-    if (fs.exists(tmp)) fs.delete(tmp, true)
-    if (!fs.exists(p) && fs.exists(bak)) {
-      if (!fs.rename(bak, p)) sys.error(s"compact recover: cannot restore $path")
-      true
-    } else {
-      if (fs.exists(p) && fs.exists(bak)) fs.delete(bak, true)
-      false
-    }
   }
 
   /** Range-clustered write: repartitionByRange + sortWithinPartitions on

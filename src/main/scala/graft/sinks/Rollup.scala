@@ -1,6 +1,6 @@
 package graft.sinks
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileUtil, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -318,30 +318,21 @@ object IncrementalRollup {
       if (negate) {
         // same whole-table discipline as the transactional branch — a
         // per-leaf swap cannot make a vanished partition disappear. The
-        // table is staged complete and swapped as ONE directory; the
-        // `_applied` ledger rides along by a restore from the parked old
-        // table. A crash between the renames falls under the legacy
-        // layout's documented crash window (rebuild after a crashed
-        // maintain, or use transactional mode) — recoverUnder heals the
-        // data either way, at worst losing markers, never rows.
+        // table is staged complete WITH its `_applied` ledger (copied,
+        // plus this delta's marker) and swapped as ONE directory, so the
+        // fold and its ledger publish together; a crash between the
+        // renames is healed whole by recoverUnder.
         val folded = partitionAligned(
           fold(existingAll, agg, existingAll.columns.toSeq))
-        val tmp = new Path(p0.getParent, s".${p0.getName}__staging")
-        if (fs.exists(tmp)) fs.delete(tmp, true)
-        val w = folded.write.mode("overwrite")
-        (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
-          .parquet(tmp.toString)
-        val bak = new Path(p0.getParent, s".${p0.getName}__old")
-        if (!fs.rename(p0, bak))
-          sys.error(s"IncrementalRollup.foldDeletion: cannot stage $p0 aside")
-        if (!fs.rename(tmp, p0)) {
-          fs.rename(bak, p0)
-          sys.error(s"IncrementalRollup.foldDeletion: swap failed for $p0")
+        val ledger = new Path(p0, "_applied")
+        SwapUtil.replace(fs, p0, "IncrementalRollup.foldDeletion") { tmp =>
+          MergeWrite.writeTo(folded, partitionBy)(tmp)
+          if (fs.exists(ledger))
+            FileUtil.copy(fs, ledger, fs, new Path(tmp, "_applied"), false,
+              spark.sparkContext.hadoopConfiguration)
+          marker.foreach(mk =>
+            fs.create(new Path(tmp, s"_applied/${mk.getName}"), true).close())
         }
-        val oldMarkers = new Path(bak, "_applied")
-        if (fs.exists(oldMarkers))
-          fs.rename(oldMarkers, new Path(p0, "_applied"))
-        fs.delete(bak, true)
       } else {
         val existing = Upsert.prunedExisting(agg, existingAll, partitionBy)
         MergeWrite.commitStaged(spark,

@@ -245,25 +245,71 @@ object UpsertIgnore {
   }
 }
 
-/** Directory swap with stage-aside semantics, shared by the rewriting
-  * sinks (same discipline as Maintenance.compact): the live directory is
-  * renamed aside before the staged replacement moves in, so a failed
-  * forward rename can restore it — `delete + rename` would lose the
-  * table to a crash in between. A crash BETWEEN the two renames still
-  * leaves the data parked in the hidden `.<name>__old` sibling; callers
-  * inherit compact's single-writer/no-concurrent-reader contract, and
-  * `Maintenance.recover`-style healing applies (restore `__old` when the
-  * destination is missing).
+/** The one way a rewritten directory replaces a live one. [[replace]]
+  * writes the new contents into the hidden sibling `.<name>__staging`;
+  * [[stageAsideSwap]] then renames the live directory aside to
+  * `.<name>__old`, renames the staging directory into its place and
+  * drops the backup. A failed forward rename restores the backup
+  * (`delete + rename` would lose the table to a crash in between).
+  * Every engine writer that rewrites a table or artifact directory
+  * (the merge sinks, the rollup, compaction, the serving indexes) comes
+  * through here, so these two names are the only crash leftovers.
+  *
+  * A crash BETWEEN the two renames parks the live data in
+  * `.<name>__old`; [[recoverOne]] heals it (restore the backup when the
+  * live directory is missing, else drop it). Who heals when:
+  *  - [[replace]] and [[stageAsideSwap]] heal their target first;
+  *  - a read that feeds a rewrite runs [[recoverUnder]] (Upsert,
+  *    IncrementalRollup and compaction), which also heals the partition
+  *    leaves of a per-leaf swap;
+  *  - `DurableStore.hasData`, which every store's existence check,
+  *    read, count and compaction go through, runs [[recoverOne]].
+  * A stale `.<name>__staging` is garbage; the next [[replace]] drops it.
+  *
+  * CONTRACT — single writer, no concurrent readers during the swap: the
+  * two renames are not atomic as a pair. On object stores a directory
+  * "rename" is an O(data) copy, which widens that window; there the
+  * answer is a manifest commit (TxTable).
   */
 private[graft] object SwapUtil {
-  def stageAsideSwap(
+  private def sibling(p: Path, tag: String) =
+    new Path(p.getParent, s".${p.getName}__$tag")
+
+  /** Replace the directory `target` by what `write` puts into the fresh
+    * staging directory it is given. A `write` that throws leaves the
+    * live target untouched (and its partial staging dir for the next
+    * call to drop). `mayBeAbsent`: `target` may not exist yet.
+    */
+  def replace(
+      fs: org.apache.hadoop.fs.FileSystem,
+      target: Path,
+      who: String,
+      mayBeAbsent: Boolean = false)(write: Path => Unit): Unit =
+    stageAsideSwap(fs, target, stage(fs, target)(write), who, mayBeAbsent)
+
+  /** The first half of [[replace]]: heal `target`, drop a stale staging
+    * dir, `write` a fresh one and return it.
+    */
+  private[sinks] def stage(fs: org.apache.hadoop.fs.FileSystem,
+      target: Path)(write: Path => Unit): Path = {
+    recoverOne(fs, target)
+    val staging = sibling(target, "staging")
+    if (fs.exists(staging)) fs.delete(staging, true)
+    write(staging)
+    staging
+  }
+
+  /** The second half: swap `staged` in at `dst`, parking the live
+    * directory at `.<name>__old` until the forward rename succeeded.
+    */
+  private[sinks] def stageAsideSwap(
       fs: org.apache.hadoop.fs.FileSystem,
       dst: Path,
       staged: Path,
       who: String,
-      dstMayBeAbsent: Boolean = false): Unit = {
+      dstMayBeAbsent: Boolean): Unit = {
     recoverOne(fs, dst) // heal a previous crash before touching anything
-    val bak = new Path(dst.getParent, s".${dst.getName}__old")
+    val bak = sibling(dst, "old")
     val hadDst = fs.exists(dst)
     if (!hadDst && !dstMayBeAbsent)
       sys.error(s"$who: swap destination $dst is missing")
@@ -277,12 +323,23 @@ private[graft] object SwapUtil {
     ()
   }
 
+  /** Write `text` (UTF-8) to the small file `p`, replacing it, and sync
+    * it to stable storage before returning: a marker or manifest that a
+    * later rename or swap publishes must never be published truncated.
+    */
+  def writeSynced(fs: org.apache.hadoop.fs.FileSystem, p: Path,
+      text: String): Unit = {
+    val out = fs.create(p, true)
+    try { out.write(text.getBytes("UTF-8")); out.hsync() }
+    finally out.close()
+  }
+
   /** Heal one swap destination: live dir missing + `.name__old` parked →
     * restore the backup; both present → the forward swap had completed,
     * drop the stale backup. Idempotent. Returns true when a restore ran.
     */
   def recoverOne(fs: org.apache.hadoop.fs.FileSystem, dst: Path): Boolean = {
-    val bak = new Path(dst.getParent, s".${dst.getName}__old")
+    val bak = sibling(dst, "old")
     if (!fs.exists(bak)) false
     else if (!fs.exists(dst)) {
       if (!fs.rename(bak, dst)) sys.error(s"swap recover: cannot restore $dst")
@@ -574,10 +631,20 @@ private[sinks] object MergeWrite {
       } finally spark.conf.set(inferKey, saved)
     }
 
-  /** Write `merged` to a hidden staging sibling, then commit: whole-dir
-    * stage-aside swap for flat targets, per-LEAF swap for partitioned
-    * ones — only the partitions present in `merged` are replaced;
-    * untouched directories are never listed, read, or rewritten.
+  /** The staging write of a rewrite: `df` overwritten into `dir`,
+    * partitioned like the target.
+    */
+  def writeTo(df: DataFrame, partitionBy: Seq[String])(dir: Path): Unit = {
+    val w = df.write.mode("overwrite")
+    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
+      .parquet(dir.toString)
+  }
+
+  /** Write `merged` to the hidden staging sibling, then commit: the
+    * whole-dir [[SwapUtil.replace]] for flat targets, a per-LEAF swap for
+    * partitioned ones — only the partitions present in `merged` are
+    * replaced; untouched directories are never listed, read, or
+    * rewritten.
     */
   def commitStaged(
       spark: SparkSession,
@@ -587,15 +654,10 @@ private[sinks] object MergeWrite {
       who: String): Unit = {
     val p = new Path(targetPath)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new Path(p.getParent, s".${p.getName}__staging")
-    if (fs.exists(tmp)) fs.delete(tmp, true)
-    val w = merged.write.mode("overwrite")
-    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
-      .parquet(tmp.toString)
-
-    if (partitionBy.isEmpty) {
-      SwapUtil.stageAsideSwap(fs, p, tmp, who, dstMayBeAbsent = true)
-    } else {
+    if (partitionBy.isEmpty)
+      SwapUtil.replace(fs, p, who, mayBeAbsent = true)(writeTo(merged, Nil))
+    else {
+      val tmp = SwapUtil.stage(fs, p)(writeTo(merged, partitionBy))
       // swap ONLY the touched leaf partition dirs; everything else stays.
       // Qualify the staging root first: listStatus returns scheme-
       // qualified paths, so an unqualified prefix would not strip and
@@ -650,14 +712,11 @@ object MergeOverwrite {
       path: String,
       keys: Seq[String],
       orderCol: String): Unit = {
-    val exists = {
-      val p = new Path(path)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      SwapUtil.recoverOne(fs, p) // heal a crashed previous swap first
-      fs.exists(p)
-    }
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    SwapUtil.recoverOne(fs, p) // heal a crashed previous swap first
     val merged =
-      if (!exists) incoming
+      if (!fs.exists(p)) incoming
       else {
         val existing = spark.read.schema(incoming.schema).parquet(path)
         // priority 0 = existing (wins), 1 = incoming — deterministic
@@ -669,14 +728,9 @@ object MergeOverwrite {
           .drop("__prio")
       }
     // Overwriting the path we read from: materialize through a staging
-    // dir, then swap with the stage-aside discipline (a failed forward
-    // rename restores the original — never delete-then-rename).
-    val p = new Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val t = new Path(p.getParent, s".${p.getName}__staging")
-    if (fs.exists(t)) fs.delete(t, true)
-    merged.write.mode("overwrite").parquet(t.toString)
-    SwapUtil.stageAsideSwap(fs, p, t, "MergeOverwrite", dstMayBeAbsent = true)
+    // dir, then swap (a failed forward rename restores the original)
+    SwapUtil.replace(fs, p, "MergeOverwrite", mayBeAbsent = true)(
+      MergeWrite.writeTo(merged, Nil))
   }
 }
 

@@ -132,29 +132,25 @@ object TxTable {
   private def writeManifest(f: FileSystem, log: Path, m: Manifest): Unit = {
     f.mkdirs(log)
     val tmp = new Path(log, s".${manifestName(m.version)}.tmp")
-    val out = f.create(tmp, true)
-    try {
-      val sb = new StringBuilder
-      sb.append("version ").append(m.version).append('\n')
-      sb.append("deltaIds")
-      m.deltaIds.foreach(id => sb.append(' ').append(id))
-      sb.append('\n')
-      // StructType.json is one line (no newline/tab can appear in it)
-      m.schema.foreach(s => sb.append("schema ").append(s.json).append('\n'))
-      m.entries.sortBy(e => (e._1, e._2)).foreach { case (p, d) =>
-        sb.append(p).append('\t').append(d).append('\n')
+    val sb = new StringBuilder
+    sb.append("version ").append(m.version).append('\n')
+    sb.append("deltaIds")
+    m.deltaIds.foreach(id => sb.append(' ').append(id))
+    sb.append('\n')
+    // StructType.json is one line (no newline/tab can appear in it)
+    m.schema.foreach(s => sb.append("schema ").append(s.json).append('\n'))
+    m.entries.sortBy(e => (e._1, e._2)).foreach { case (p, d) =>
+      sb.append(p).append('\t').append(d).append('\n')
+    }
+    m.stats.toSeq.sortBy(_._1).foreach { case (d, cols) =>
+      cols.toSeq.sortBy(_._1).foreach { case (c, (lo, hi)) =>
+        sb.append("stats ").append(d).append('\t').append(c)
+          .append('\t').append(lo).append('\t').append(hi).append('\n')
       }
-      m.stats.toSeq.sortBy(_._1).foreach { case (d, cols) =>
-        cols.toSeq.sortBy(_._1).foreach { case (c, (lo, hi)) =>
-          sb.append("stats ").append(d).append('\t').append(c)
-            .append('\t').append(lo).append('\t').append(hi).append('\n')
-        }
-      }
-      out.write(sb.toString.getBytes("UTF-8"))
-      // flush to stable storage BEFORE the publishing rename: an atomic
-      // rename of an unflushed file could publish a truncated manifest
-      out.hsync()
-    } finally out.close()
+    }
+    // synced to stable storage BEFORE the publishing rename: an atomic
+    // rename of an unflushed file could publish a truncated manifest
+    SwapUtil.writeSynced(f, tmp, sb.toString)
     val dst = new Path(log, manifestName(m.version))
     if (!f.rename(tmp, dst))
       sys.error(s"TxTable: manifest publish failed for $dst " +

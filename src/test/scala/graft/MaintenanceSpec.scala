@@ -93,13 +93,13 @@ class MaintenanceSpec extends SparkSpec {
     // table path is gone, data parked in the hidden backup
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val bak = new org.apache.hadoop.fs.Path(p.getParent, s".${p.getName}__compact_old")
+    val bak = new org.apache.hadoop.fs.Path(p.getParent, s".${p.getName}__old")
     assert(fs.rename(p, bak))
     assert(!fs.exists(p))
-    assert(Maintenance.recover(spark, path), "recover reported no restore")
+    assert(graft.sinks.SwapUtil.recoverOne(fs, p), "recover reported no restore")
     assert(spark.read.parquet(path).count() == rows)
     // and recover is idempotent / no-op on a healthy table
-    assert(!Maintenance.recover(spark, path))
+    assert(!graft.sinks.SwapUtil.recoverOne(fs, p))
     // a crashed state is also healed implicitly by the next compact call
     assert(fs.rename(p, bak))
     val (_, after) = Maintenance.compact(spark, path, targetFileBytes = 8L * 1024 * 1024)

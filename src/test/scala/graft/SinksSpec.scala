@@ -358,6 +358,59 @@ class SinksSpec extends SparkSpec {
     assert(t.filter(col("k") === 1L).select("v").head().getDouble(0) == 7.7)
   }
 
+  test("SCD1 upsert: a compaction that crashed between its renames loses NO rows") {
+    val dir = tmpDir("scd1compactcrash") + "/t"
+    seedPartitioned(dir)
+    // Maintenance.compact crashed between rename(table, backup) and
+    // rename(staging, table): the whole table is parked at the backup
+    val p = new org.apache.hadoop.fs.Path(dir)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    assert(fs.rename(p, new org.apache.hadoop.fs.Path(p.getParent, ".t__old")))
+    val r = Upsert(spark,
+      Seq(("2026-01-01", 1L, 7.7)).toDF("day", "k", "v"),
+      dir, Seq("day", "k"), Seq("day"))
+    assert(r == Upsert.Result(updated = 1, inserted = 0))
+    graft.sinks.Maintenance.compact(spark, dir, targetFileBytes = 8L * 1024 * 1024)
+    val t = spark.read.parquet(dir)
+    assert(t.select("k", "v").as[(Long, Double)].collect().sorted.toSeq ==
+      Seq((1L, 7.7), (2L, 2.0), (3L, 3.0), (4L, 4.0)))
+  }
+
+  test("SwapUtil.replace: a failed write leaves the target intact; the next replace succeeds") {
+    import java.nio.file.{Files, Paths}
+    import org.apache.hadoop.fs.Path
+    val dir = tmpDir("replace") + "/t"
+    Seq(1L, 2L, 3L).toDF("k").write.parquet(dir)
+    val p = new Path(dir)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    def files(): Map[String, Seq[Byte]] = {
+      val root = Paths.get(dir)
+      val walk = Files.walk(root)
+      try walk.filter(Files.isRegularFile(_)).toArray.toSeq.map { f =>
+        val path = f.asInstanceOf[java.nio.file.Path]
+        root.relativize(path).toString -> Files.readAllBytes(path).toSeq
+      }.toMap
+      finally walk.close()
+    }
+    val before = files()
+    val err = intercept[IllegalStateException] {
+      graft.sinks.SwapUtil.replace(fs, p, "replace test") { staging =>
+        Seq(9L).toDF("k").write.parquet(staging.toString)
+        throw new IllegalStateException("write failed")
+      }
+    }
+    assert(err.getMessage == "write failed")
+    assert(files() == before, "a failed write touched the live target")
+    val staging = new Path(p.getParent, ".t__staging")
+    assert(fs.exists(staging), "the failed write's staging dir should be left over")
+    // an ErrorIfExists write: it succeeds only once the leftover is gone
+    graft.sinks.SwapUtil.replace(fs, p, "replace test") { s =>
+      Seq(4L, 5L).toDF("k").write.parquet(s.toString)
+    }
+    assert(spark.read.parquet(dir).as[Long].collect().sorted.toSeq == Seq(4L, 5L))
+    assert(!fs.exists(staging) && !fs.exists(new Path(p.getParent, ".t__old")))
+  }
+
   test("SCD1 upsert: numeric-looking STRING partition values never fragment the layout") {
     val dir = tmpDir("scd1names") + "/t"
     val seed = Seq(("01", 1L, 1.0), ("01", 2L, 2.0), ("2", 3L, 3.0))

@@ -94,6 +94,32 @@ class StoreCrashSpec extends SparkSpec {
     }
   }
 
+  test("compaction crash: a parked MinHash table is restored, not replaced") {
+    val first = docs(60)
+    // new owners of the same texts: every one pairs with a stored doc
+    val second = docs(60).withColumn("doc_id", $"doc_id" + 1000L)
+    def ingest(store: String, batch: DataFrame) =
+      IncrementalDedup.ingest(spark, batch, "doc_id", "text", store)
+        .collect().toSet
+    val clean = tmpDir("compactclean") + "/store"
+    ingest(clean, first)
+    val wantPairs = ingest(clean, second)
+    IncrementalDedup.compactStore(spark, clean)
+    val store = tmpDir("compactcrash") + "/store"
+    ingest(store, first)
+    // a compaction that crashed between rename(bands, backup) and
+    // rename(staging, bands) leaves the table parked at the backup name
+    val bands = new java.io.File(s"$store/bands")
+    assert(bands.renameTo(new java.io.File(s"$store/.bands__old")))
+    val gotPairs = ingest(store, second)
+    assert(gotPairs === wantPairs)
+    IncrementalDedup.compactStore(spark, store)
+    assert(IncrementalDedup.storedDocs(spark, store) ===
+      IncrementalDedup.storedDocs(spark, clean))
+    assert(DurableStore.count(spark, s"$store/bands") ===
+      DurableStore.count(spark, s"$clean/bands"))
+  }
+
   private val logs = Seq[(String, String => DataFrame)](
     "pairs" -> (StreamingDedup.pairs(spark, _)),
     "substringPairs" -> (StreamingDedup.substringPairs(spark, _)),
