@@ -1,4 +1,7 @@
 package graft
+import scala.collection.immutable.ListMap
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 object Bench {
   // 1-min system load average, so the artifact itself adjudicates
@@ -9,39 +12,54 @@ object Bench {
     java.lang.management.ManagementFactory.getOperatingSystemMXBean
       .getSystemLoadAverage
 
+  /** `body`, or `orElse` once the failure is printed to stderr. */
+  private def attempt[T](stage: String, orElse: => T)(body: => T): T =
+    try body catch { case NonFatal(e) =>
+      System.err.println(s"[bench] $stage failed: ${e.getMessage}")
+      orElse
+    }
+
+  /** One timed entry run: wall seconds of its `.count()`, what Spark did
+    * meanwhile, and whether it threw.
+    */
+  final case class Run(name: String, sec: Double, layers: Layers.Counts,
+      failed: Boolean)
+
+  /** Each entry timed once per round, `repeat` rounds; a run after the
+    * first round is named `<entry>__r<round>`. A query that THROWS at
+    * this SF must be visible in the output, not silently timed as a fast
+    * failure, so the run records it.
+    */
+  def timeEntries(spark: SparkSession, sfDir: String,
+      entries: Seq[(String, GraftSession.Entry)], repeat: Int): Seq[Run] =
+    (1 to repeat).flatMap(r => entries.map { case (n, fn) =>
+      (if (r == 1) n else s"${n}__r$r") -> fn
+    }).map { case (name, fn) =>
+      val ((sec, failed), layers) = Layers.measure(spark.sparkContext) {
+        val t0 = System.nanoTime()
+        val failed =
+          try { fn(spark, sfDir).count(); false }
+          catch { case e: Throwable =>
+            System.err.println(s"[bench] $name failed: ${e.getMessage}")
+            true
+          }
+        ((System.nanoTime() - t0) / 1e9, failed)
+      }
+      Run(name, sec, layers, failed)
+    }
+
   def main(args: Array[String]): Unit = {
     val loadStart = loadAvg()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // Scale-adaptive reduce-side sizing (opt guide §2.2/§6): let AQE
-      // coalesce post-shuffle partitions toward a BYTE target instead of
-      // stopping at the core count (`parallelismFirst=true` pins tiny
-      // shuffles at `spark.sql.shuffle.partitions` ~KB-sized tasks whose
-      // scheduling overhead exceeds their work; at cluster scale the
-      // same setting yields advisory-sized partitions). The advisory
-      // size is env-tunable for production (guide §9 suggests 256m on a
-      // real cluster); the local default stays Spark's own 64m so the
-      // driver's bench remains comparable.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_ADVISORY_PART", "64m"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     // Warm up codegen/JIT/parquet-reader paths on the tiny SF so the first
     // measured query doesn't absorb one-time session costs. The document
     // pipelines compile large generated classes (tokenize/shingle/minhash/
     // simhash); a LIMITed pass pre-JITs them the way any long-lived
     // cluster session would be warm — measured queries then time the
     // operator, not the first-compile.
-    try SparkEntry.entry(spark).count() catch { case _: Throwable => () }
-    try {
+    attempt("entry warm-up", ())(SparkEntry.entry(spark).count())
+    attempt("warm-up", ()) {
       val tinyDocs = Tables.documents(spark, sfDir).limit(64)
       graft.ext.Dedup.minhashNearDups(tinyDocs, "doc_id", "text").count()
       graft.ext.Dedup.simhashNearDups(tinyDocs, "doc_id", "text").count()
@@ -67,69 +85,53 @@ object Bench {
         warm.resolve("ckpt").toString)
       val wp = new org.apache.hadoop.fs.Path(warm.toString)
       wp.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(wp, true)
-    } catch { case _: Throwable => () }
+    }
     // IVF index build is a one-time ETL artifact, not query latency —
     // build it up front and report the cost as its own line (the standard
     // ANN-benchmark split: build time and probe latency are different
     // metrics, and hiding either would misstate both).
     val tIdx = System.nanoTime()
-    try queries.ExtQueries.buildIndexes(spark, sfDir) catch { case _: Throwable => () }
+    attempt("ivf index build", ())(queries.ExtQueries.buildIndexes(spark, sfDir))
     val idxSec = (System.nanoTime() - tIdx) / 1e9
     // same split for the Hamming image index: layout pass up front, the
     // ext_image_index_topk entry then times the pruned probe alone
     val tImg = System.nanoTime()
-    try queries.ExtQueries.ensureImageIndex(spark, sfDir)
-    catch { case _: Throwable => () }
+    attempt("image index build", ())(queries.ExtQueries.ensureImageIndex(spark, sfDir))
     val imgIdxSec = (System.nanoTime() - tImg) / 1e9
-    // a query that THROWS at this SF must be visible in the output, not
-    // silently timed as a fast failure — collect names for the JSON line
-    val failed = scala.collection.mutable.ArrayBuffer.empty[String]
-    // Dev-loop filter: SPARK_GRAFT_ONLY=name1,name2 times just those
-    // entries (optionally SPARK_GRAFT_REPEAT=n times each, to separate
-    // steady-state latency from first-run JIT/IO). Unset for the driver's
-    // full run — the artifact contract is unchanged.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val repeat = sys.env.get("SPARK_GRAFT_REPEAT").map(_.toInt).getOrElse(1)
-    val selected = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
-    val results = (1 to repeat).flatMap(r => selected.map { case (n, fn) =>
-      (if (r == 1) n else s"${n}__r$r") -> fn
-    }).map { case (name, fn) =>
-      val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() }
-      catch { case _: Throwable => failed += name; -1L }
-      name -> (System.nanoTime() - t0) / 1e9
-    }.toMap + ("ivf_index_build" -> idxSec) +
-      ("image_index_build" -> imgIdxSec)
+    // SPARK_GRAFT_ONLY / SPARK_GRAFT_REPEAT (GraftSession) narrow the run
+    // for the dev loop; repeats separate steady-state latency from
+    // first-run JIT/IO. A full run sets neither.
+    val runs = timeEntries(spark, sfDir, GraftSession.entries, GraftSession.repeat)
+    val failed = runs.filter(_.failed).map(_.name)
+    val results = runs.map(r => r.name -> r.sec).toMap +
+      ("ivf_index_build" -> idxSec) + ("image_index_build" -> imgIdxSec)
     // Store-hygiene lifecycle: a REAL two-ingest near-dup store with a
     // forget (so tombstones are present) is compacted, and the
     // before/after data-file counts ride the artifact — file-count
     // creep or tombstones failing to fold become visible
     // round-over-round instead of needing a manual repro.
-    val (compactFilesBefore, compactFilesAfter, compactSec) = try {
-      import org.apache.spark.sql.functions.col
-      val docs = Tables.documents(spark, sfDir)
-        .filter(col("doc_id") < 200).select("doc_id", "text")
-      val work = java.nio.file.Files.createTempDirectory("graft_bench_store")
-      val store = work.resolve("store").toString
-      graft.ext.IncrementalDedup.ingest(spark,
-        docs.filter(col("doc_id") < 100), "doc_id", "text", store).count()
-      graft.ext.IncrementalDedup.ingest(spark,
-        docs.filter(col("doc_id") >= 100), "doc_id", "text", store).count()
-      import spark.implicits._
-      graft.ext.IncrementalDedup.forget(spark, store,
-        Seq(5L, 7L).toDF("doc_id"))
-      val t0 = System.nanoTime()
-      val (b, a) = graft.ext.IncrementalDedup.compactStore(spark, store)
-      val sec = (System.nanoTime() - t0) / 1e9
-      val wp = new org.apache.hadoop.fs.Path(work.toString)
-      wp.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(wp, true)
-      (b, a, sec)
-    } catch { case _: Throwable => (-1, -1, 0.0) }
+    val (compactFilesBefore, compactFilesAfter, compactSec) =
+      attempt("store compaction", (-1, -1, 0.0)) {
+        import org.apache.spark.sql.functions.col
+        val docs = Tables.documents(spark, sfDir)
+          .filter(col("doc_id") < 200).select("doc_id", "text")
+        val work = java.nio.file.Files.createTempDirectory("graft_bench_store")
+        val store = work.resolve("store").toString
+        graft.ext.IncrementalDedup.ingest(spark,
+          docs.filter(col("doc_id") < 100), "doc_id", "text", store).count()
+        graft.ext.IncrementalDedup.ingest(spark,
+          docs.filter(col("doc_id") >= 100), "doc_id", "text", store).count()
+        import spark.implicits._
+        graft.ext.IncrementalDedup.forget(spark, store,
+          Seq(5L, 7L).toDF("doc_id"))
+        val t0 = System.nanoTime()
+        val (b, a) = graft.ext.IncrementalDedup.compactStore(spark, store)
+        val sec = (System.nanoTime() - t0) / 1e9
+        val wp = new org.apache.hadoop.fs.Path(work.toString)
+        wp.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(wp, true)
+        (b, a, sec)
+      }
     val all = results + ("store_compaction" -> compactSec)
-    val qs = all.map { case (k, v) => s"\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
     val total = if (all.nonEmpty) all.values.sum else 0.0
     // Entries that time one-time lifecycle work (index builds, real
     // stream start/stop) rather than steady-state query latency — still
@@ -149,28 +151,36 @@ object Bench {
         // three REAL transactional ingests + a vacuumed erasure — the
         // per-batch commit/store lifecycle, not per-row query latency
         "ext_takedown_e2e")
-    val lifecycle = (lifecycleKeys.flatMap(k => all.get(k).map(k -> _))
-      .map { case (k, v) => s"\"" + k + "\":" + v } :+
-      s""""store_compaction_files":{"before":$compactFilesBefore,"after":$compactFilesAfter}""")
-      .mkString("{", ",", "}")
-    val slowest = all.toSeq.sortBy(-_._2).take(5)
-      .map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
+    val lifecycle = ListMap(lifecycleKeys.flatMap(k => all.get(k).map(k -> _)): _*) +
+      ("store_compaction_files" ->
+        ListMap("before" -> compactFilesBefore, "after" -> compactFilesAfter))
+    // What Spark did per entry run (Layers): load-insensitive job, stage,
+    // task and compile counts beside the executor and GC time.
+    val layers = ListMap(runs.map { r =>
+      r.name -> ListMap("jobs" -> r.layers.jobs, "stages" -> r.layers.stages,
+        "tasks" -> r.layers.tasks, "task_s" -> r.layers.taskMs / 1e3,
+        "gc_ms" -> r.layers.gcMs, "cgen_n" -> r.layers.compiles)
+    }: _*)
     // Native-expression resolution, in the artifact itself: the dedup
     // families run ~7-10x slower through their declarative fallbacks, so
     // a timing read without knowing WHICH path executed is ambiguous
     // (the r4 simhash outlier sat exactly on the fallback's number).
-    val natives = Seq("graft_minhash", "graft_simhash", "graft_isect",
+    val natives = ListMap(Seq("graft_minhash", "graft_simhash", "graft_isect",
         "graft_cosine", "graft_dot", "graft_rplsh", "graft_deflate_ratio",
         "graft_nfc", "graft_dhash", "graft_dhash_px")
-      .map(n => s"\"" + n + "\":" + spark.catalog.functionExists(n))
-      .mkString("{", ",", "}")
-    // One JSON line, headline duplicated at BOTH ends: the driver's
-    // capture keeps only the tail of long output, so the trailing
-    // "slowest"/"total_sec" keys survive truncation even when the
-    // per-query map does not; full-line parsers read the leading keys.
-    val errs = failed.map(n => s"\"" + n + "\"").mkString("[", ",", "]")
-    val loadEnd = loadAvg()
-    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","lifecycle":$lifecycle,"slowest":$slowest,"errors":$errs,"natives":$natives,"load_start":$loadStart,"load_end":$loadEnd,"n_queries":${all.size},"total_sec":$total}""")
+      .map(n => n -> spark.catalog.functionExists(n)): _*)
+    // One JSON line, headline duplicated at BOTH ends: a capture that
+    // keeps only the tail of long output still holds the trailing
+    // "slowest"/"total_sec" keys when the per-query and per-layer maps
+    // are cut; full-line parsers read the leading keys.
+    println(GraftSession.json(ListMap(
+      "metric" -> "total", "value" -> total, "unit" -> "sec",
+      "queries" -> all, "sf" -> sfDir, "lifecycle" -> lifecycle,
+      "layers" -> layers,
+      "slowest" -> ListMap(all.toSeq.sortBy(-_._2).take(5): _*),
+      "errors" -> failed, "natives" -> natives,
+      "load_start" -> loadStart, "load_end" -> loadAvg(),
+      "n_queries" -> all.size, "total_sec" -> total)))
     spark.stop()
   }
 }

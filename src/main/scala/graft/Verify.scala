@@ -1,35 +1,15 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // the AQE byte-sizing confs Bench times under, so the verified
-      // regime is the timed one
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_ADVISORY_PART", "64m"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     new java.io.File(outDir).mkdirs()
-    // Dev-loop filter: SPARK_GRAFT_ONLY=q1,q2 runs a subset. The driver
-    // never sets it, so the t2 gate always covers everything.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-    val selected = only match {
-      case Some(names) => SparkEntry.queries.filter(kv => names(kv._1))
-      case None        => SparkEntry.queries
-    }
+    // SPARK_GRAFT_ONLY=q1,q2 (GraftSession.entries) runs a subset for the
+    // dev loop; unset, every entry is dumped.
+    val selected = GraftSession.entries
     val failed = selected.flatMap { case (name, fn) =>
       try {
         fn(spark, sfDir).coalesce(1).write.mode("overwrite")
@@ -43,21 +23,8 @@ object Verify {
     // one summary line, so a failure is not lost among the log lines
     System.err.println(
       s"[verify] failed ${failed.size}/${selected.size}: ${failed.mkString(",")}")
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      GraftSession.json(SparkEntry.oracleSql))
     spark.stop()
   }
 }

@@ -50,9 +50,7 @@ private[graft] object DurableStore {
     * healing a swap that crashed between its renames.
     */
   def hasData(spark: SparkSession, path: String): Boolean = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    SwapUtil.recoverOne(fs, p)
+    val (fs, p) = SwapUtil.healed(spark, path)
     fs.exists(p) && fs.listStatus(p).exists { f =>
       val n = f.getPath.getName
       f.isFile && n.endsWith(".parquet") && !n.startsWith("_") &&

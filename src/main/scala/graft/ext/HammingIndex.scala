@@ -99,11 +99,13 @@ private[ext] object HammingIndex {
       s"maxhamming $maxHamming\nrows $rows\nfilesperchunk $filesPerChunk\n")
 
   /** True when a built artifact exists at `path` (build_meta is staged
-    * with the postings, so its presence implies the whole layout).
+    * with the postings, so its presence implies the whole layout). A
+    * swap that crashed between its renames is healed first: it left the
+    * artifact parked, intact, at its backup name.
     */
   def exists(spark: SparkSession, path: String): Boolean = {
-    val p = new Path(s"$path/build_meta")
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
+    val (fs, root) = graft.sinks.SwapUtil.healed(spark, path)
+    fs.exists(new Path(root, "build_meta"))
   }
 
   /** The blocking bound the artifact was built at (from build_meta). */

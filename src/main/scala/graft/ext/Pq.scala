@@ -495,11 +495,14 @@ object Pq {
     cb
   }
 
-  /** True when a durable PQ layer exists at `ivfPath/pq`. */
+  /** True when a durable PQ layer exists at `ivfPath/pq`. An attach
+    * whose swap crashed between its renames left the layer parked,
+    * intact, at its backup name; it is restored first.
+    */
   def pqAttached(
       spark: org.apache.spark.sql.SparkSession, ivfPath: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(s"$ivfPath/pq/meta")
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
+    val (fs, pq) = graft.sinks.SwapUtil.healed(spark, s"$ivfPath/pq")
+    fs.exists(new org.apache.hadoop.fs.Path(pq, "meta"))
   }
 
   private def pinnedToken(

@@ -523,8 +523,8 @@ object Similarity {
 
   private def readBuildRows(
       spark: SparkSession, path: String): Option[Long] = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/build_meta")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val (fs, root) = graft.sinks.SwapUtil.healed(spark, path)
+    val p = new org.apache.hadoop.fs.Path(root, "build_meta")
     if (!fs.exists(p)) None
     else {
       val in = fs.open(p)
@@ -561,10 +561,13 @@ object Similarity {
       .sorted.mkString("|")
   }
 
-  /** True when a persisted index exists at `path`. */
+  /** True when a persisted index exists at `path`. A swap that crashed
+    * between its renames left the index parked, intact, at its backup
+    * name; it is restored first.
+    */
   def persistedIndexExists(spark: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/centroids")
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
+    val (fs, root) = graft.sinks.SwapUtil.healed(spark, path)
+    fs.exists(new org.apache.hadoop.fs.Path(root, "centroids"))
   }
 
   /** Probe a persisted IVF index: centroid metadata is one tiny read

@@ -222,7 +222,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
 object GraftExtensions {
   /** Generated-class cache size: about twice the 1,962 classes a full
-    * `graft.Profile` run compiles (sf0.1). At 2048 the same run compiled
+    * run of the sf0.1 entries compiles (the sum of `graft.Bench`'s
+    * per-entry `cgen_n`). At 2048 the same run compiled
     * 2,017: the cache evicts per segment, before the whole of it is full.
     */
   val CodegenCacheEntries = 4096

@@ -263,7 +263,11 @@ object UpsertIgnore {
   *    IncrementalRollup and compaction), which also heals the partition
   *    leaves of a per-leaf swap;
   *  - `DurableStore.hasData`, which every store's existence check,
-  *    read, count and compaction go through, runs [[recoverOne]].
+  *    read, count and compaction go through, runs [[healed]];
+  *  - so do the serving artifacts' existence checks
+  *    (`HammingIndex.exists`, `Similarity.persistedIndexExists`,
+  *    `Pq.pqAttached`), which their probes, appends and compactions
+  *    require.
   * A stale `.<name>__staging` is garbage; the next [[replace]] drops it.
   *
   * CONTRACT — single writer, no concurrent readers during the swap: the
@@ -345,6 +349,17 @@ private[graft] object SwapUtil {
       if (!fs.rename(bak, dst)) sys.error(s"swap recover: cannot restore $dst")
       true
     } else { fs.delete(bak, true); false }
+  }
+
+  /** The directory `path`, healed by [[recoverOne]], and its file
+    * system: what an existence check or a read of `path` starts from.
+    */
+  def healed(spark: SparkSession,
+      path: String): (org.apache.hadoop.fs.FileSystem, Path) = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    recoverOne(fs, p)
+    (fs, p)
   }
 
   /** Heal a whole table: the root itself plus every `.X__old` parked
@@ -712,9 +727,7 @@ object MergeOverwrite {
       path: String,
       keys: Seq[String],
       orderCol: String): Unit = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    SwapUtil.recoverOne(fs, p) // heal a crashed previous swap first
+    val (fs, p) = SwapUtil.healed(spark, path)
     val merged =
       if (!fs.exists(p)) incoming
       else {

@@ -120,6 +120,65 @@ class StoreCrashSpec extends SparkSpec {
       DurableStore.count(spark, s"$clean/bands"))
   }
 
+  /** A serving artifact: its build at an index path, the directory its
+    * swap replaces, its existence check, one probe and one maintenance
+    * op (a compaction or an append).
+    */
+  private case class Artifact(
+      name: String,
+      build: String => Unit,
+      swapped: String => String,
+      exists: String => Boolean,
+      probe: String => Set[Row],
+      maintain: String => Any)
+
+  private def vecs(ids: Range) = ids.map(i => (i.toLong,
+    Array.tabulate(16)(j => math.sin(i / 2 * 31.0 + j)))).toDF("vec_id", "v")
+  private val query = Seq.tabulate(16)(j => math.sin(62.0 + j))
+  private def ivf(p: String) =
+    Similarity.ivfBuildPersisted(vecs(0 until 40), "vec_id", "v", p,
+      nCentroids = 4, iters = 1)
+  private def ivfAppend(p: String) =
+    Similarity.ivfAppendPersisted(vecs(40 until 50), "vec_id", "v", p)
+
+  private val artifacts = Seq(
+    Artifact("simhash index `idx`",
+      SimhashIndex.build(docs(40), "doc_id", "text", _), identity,
+      SimhashIndex.exists(spark, _),
+      SimhashIndex.topK(spark, _, docs(6), "doc_id", "text", k = 3)
+        .collect().toSet,
+      SimhashIndex.compact(spark, _)),
+    Artifact("IVF dir", ivf, identity,
+      Similarity.persistedIndexExists(spark, _),
+      Similarity.ivfTopKPersisted(spark, _, query, k = 5, idCol = "vec_id")
+        .collect().toSet,
+      ivfAppend),
+    Artifact("PQ layer `pq`",
+      p => { ivf(p); Pq.pqAttachPersisted(spark, p, m = 4, k = 8); () },
+      p => s"$p/pq",
+      Pq.pqAttached(spark, _),
+      Pq.ivfPqTopKPersisted(spark, _, query, k = 5, idCol = "vec_id")
+        .collect().toSet,
+      p => (ivfAppend(p), Pq.pqAppendPersisted(spark, p))))
+
+  artifacts.foreach { a =>
+    test(s"swap crash: a parked ${a.name} serves as before the crash") {
+      val clean = tmpDir("swapclean") + "/idx"
+      a.build(clean)
+      val crashed = tmpDir("swapcrash") + "/idx"
+      a.build(crashed)
+      // a swap that crashed between rename(live, backup) and
+      // rename(staging, live) leaves the artifact parked at the backup
+      val live = new java.io.File(a.swapped(crashed))
+      assert(live.renameTo(
+        new java.io.File(live.getParentFile, s".${live.getName}__old")))
+      assert(a.exists(crashed), s"${a.name}: reads as absent")
+      assert(a.probe(crashed) === a.probe(clean))
+      assert(a.maintain(crashed) === a.maintain(clean))
+      assert(a.probe(crashed) === a.probe(clean))
+    }
+  }
+
   private val logs = Seq[(String, String => DataFrame)](
     "pairs" -> (StreamingDedup.pairs(spark, _)),
     "substringPairs" -> (StreamingDedup.substringPairs(spark, _)),
