@@ -10,14 +10,16 @@ with a `"metric"` key is read; a log prefix before its `{` (sbt prints
 `[info] `) is skipped.
 
 One run prints a table per entry and round: wall seconds, jobs, stages,
-tasks, executor task seconds, GC milliseconds and Janino compilations
-(`cgen_n`). A run after the first round is named `<entry>__r<round>` in
+tasks, executor task seconds, GC milliseconds, Janino compilations
+(`cgen_n`) and the milliseconds they took (`cgen_ms`; a run from before
+that key existed shows it blank). A run after the first round is named `<entry>__r<round>` in
 the JSON; the table shows it under its entry with its round number.
 
 Two runs list each entry whose jobs, stages, tasks or cgen_n differ, or
 that only one run has, and exit 1 when there is any; they exit 0 when
 every count is equal. Job, stage and task counts do not move with host
-load, so two runs of the same code on the same data must agree.
+load, so two runs of the same code on the same data must agree. Times,
+`cgen_ms` among them, are not compared.
 """
 import json
 import re
@@ -47,13 +49,14 @@ def entry_round(name):
 def table(run):
     layers, wall = run["layers"], run["queries"]
     width = max([len("query")] + [len(entry_round(n)[0]) for n in layers])
-    print(f"{'query':<{width}}  r  wall_s  jobs stages tasks task_s  gc_ms cgen_n")
+    print(f"{'query':<{width}}  r  wall_s  jobs stages tasks task_s  gc_ms cgen_n cgen_ms")
     for name in sorted(layers, key=entry_round):
         entry, r = entry_round(name)
         c = layers[name]
         print(f"{entry:<{width}} {r:2d} {wall.get(name, float('nan')):7.2f} "
               f"{c['jobs']:5d} {c['stages']:6d} {c['tasks']:5d} "
-              f"{c['task_s']:6.2f} {c['gc_ms']:6d} {c['cgen_n']:6d}")
+              f"{c['task_s']:6.2f} {c['gc_ms']:6d} {c['cgen_n']:6d} "
+              + (f"{c['cgen_ms']:7.1f}" if "cgen_ms" in c else " " * 7))
 
 
 def differences(a, b):

@@ -155,11 +155,12 @@ object Bench {
       ("store_compaction_files" ->
         ListMap("before" -> compactFilesBefore, "after" -> compactFilesAfter))
     // What Spark did per entry run (Layers): load-insensitive job, stage,
-    // task and compile counts beside the executor and GC time.
+    // task and compile counts beside the executor, GC and compile time.
     val layers = ListMap(runs.map { r =>
       r.name -> ListMap("jobs" -> r.layers.jobs, "stages" -> r.layers.stages,
         "tasks" -> r.layers.tasks, "task_s" -> r.layers.taskMs / 1e3,
-        "gc_ms" -> r.layers.gcMs, "cgen_n" -> r.layers.compiles)
+        "gc_ms" -> r.layers.gcMs, "cgen_n" -> r.layers.compiles,
+        "cgen_ms" -> r.layers.compileNs / 1e6)
     }: _*)
     // Native-expression resolution, in the artifact itself: the dedup
     // families run ~7-10x slower through their declarative fallbacks, so

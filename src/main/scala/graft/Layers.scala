@@ -5,25 +5,28 @@ import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.{ListenerBusDrain, SparkContext}
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler._
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
 /** What a block of driver code made Spark do: the jobs, stages and tasks
   * it ran, their executor run time and GC time, and the classes Janino
-  * compiled for it. Job, stage and task counts do not move with
-  * host load, so they can compare runs where wall times cannot. One
-  * listener per context serves every measurement: the bench's per-entry
-  * layers and the test suite's job and compile budgets.
+  * compiled for it and the time that took. Job, stage and task counts do
+  * not move with host load, so they can compare runs where wall times
+  * cannot. One listener per context serves every measurement: the
+  * bench's per-entry layers and the test suite's job and compile budgets.
   *
   * `SPARK_GRAFT_JOBLOG=1` also prints each job as it ends: its id, wall
   * time and the stage name and `graft` frames of its call site.
   */
 object Layers {
-  /** The counts of one measured block. Compilations are JVM-wide, so a
-    * block measures its own only while nothing else runs beside it.
+  /** The counts of one measured block. Compilations and their time
+    * (`compileNs`) are JVM-wide, so a block measures its own only while
+    * nothing else runs beside it.
     */
   final case class Counts(jobs: Long, stages: Long, tasks: Long,
-      taskMs: Long, gcMs: Long, compiles: Long) {
+      taskMs: Long, gcMs: Long, compiles: Long, compileNs: Long) {
     def -(o: Counts): Counts = Counts(jobs - o.jobs, stages - o.stages,
-      tasks - o.tasks, taskMs - o.taskMs, gcMs - o.gcMs, compiles - o.compiles)
+      tasks - o.tasks, taskMs - o.taskMs, gcMs - o.gcMs, compiles - o.compiles,
+      compileNs - o.compileNs)
   }
 
   private val jobLog = sys.env.contains("SPARK_GRAFT_JOBLOG")
@@ -59,7 +62,8 @@ object Layers {
       }
 
     def counts: Counts = Counts(jobs.get, stages.get, tasks.get, taskMs.get,
-      gcMs.get, CodegenMetrics.METRIC_COMPILATION_TIME.getCount)
+      gcMs.get, CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
+      CodeGenerator.compileTime)
   }
 
   private var installed: Option[(SparkContext, Counter)] = None

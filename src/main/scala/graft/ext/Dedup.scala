@@ -53,15 +53,6 @@ object Dedup {
         i => concat_ws(" ", slice(toks, i, lit(n)))))
   }
 
-  /** MinHash signature: numHashes independent permutations approximated by
-    * seeded xxhash64; signature[j] = min over shingles of h_j(shingle).
-    * Pure expression — computed map-side during the scan.
-    */
-  def minhashSignature(text: Column, numHashes: Int = 32, shingleN: Int = 3): Column =
-    transform(sequence(lit(0), lit(numHashes - 1)),
-      seed => array_min(transform(shingles(text, shingleN),
-        sh => xxhash64(concat(sh, lit("#"), seed.cast("string"))))))
-
   /** LSH banding: split the signature into `bands` bands of `rowsPerBand`,
     * hash each band to a bucket key. Two docs sharing ANY band bucket are
     * candidates. Returns (band, bucket) rows ready for a groupBy.

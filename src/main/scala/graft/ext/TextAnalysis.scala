@@ -135,15 +135,6 @@ object TextAnalysis {
   def fingerprintNormalized(text: Column): Column =
     md5(concat_ws(" ", tokens(text)))
 
-  /** Rolling polynomial fingerprint over tokens (order-sensitive, unlike
-    * a bag hash): acc = acc * P + xxhash64(token), 64-bit wraparound.
-    * Spark-native xxhash64 — deterministic across runs/partitions but not
-    * SQL-portable, so its queries get the rows-only check.
-    */
-  def fingerprintRolling(text: Column): Column =
-    aggregate(tokens(text), lit(0L),
-      (acc, t) => acc * lit(1000003L) + xxhash64(t))
-
   // ---- PII redaction ------------------------------------------------
   // Patterns chosen to mean the same thing in Java regex (Spark) and RE2
   // (DuckDB oracle): no backreferences, no lookaround.

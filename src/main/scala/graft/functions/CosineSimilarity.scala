@@ -6,7 +6,9 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.execution.{ColumnarRule, SparkPlan}
 import org.apache.spark.sql.internal.{SQLConf, StaticSQLConf}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 
@@ -162,6 +164,15 @@ case class DotProduct(left: Expression, right: Expression)
   * (SparkConf, `--conf` or a `-Dspark.sql...` system property) wins. If
   * codegen already ran in this JVM before the first session was built,
   * the cache exists and this does nothing.
+  *
+  * The cache is keyed by generated source, and codegen writes a
+  * literal's value into it. So it also installs
+  * [[DatetimeLiteralsByReference]], which hands the date and timestamp
+  * literals of physical plans to generated code by reference. Those are
+  * the clock-derived values (`current_timestamp()`, a run's `now` or
+  * anchor day) that change between otherwise identical runs of a daily
+  * job; other literals are fixed by the query and stay inlined, where
+  * the compiler can fold them.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -217,6 +228,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // plan-level algebra over the custom expressions (the Rule tier):
     // collapse idempotent re-normalization
     ext.injectOptimizerRule(_ => CollapseIdempotentNfc)
+    // datetime literals reach generated code by reference
+    ext.injectColumnar(_ => new ColumnarRule {
+      override def preColumnarTransitions: Rule[SparkPlan] = DatetimeLiteralsByReference
+    })
   }
 }
 

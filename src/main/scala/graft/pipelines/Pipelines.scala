@@ -120,8 +120,9 @@ object Pipelines {
     * each source table, provenance-tagged, column-union schema merge
     * (§1.2 drift), shipped via the partition-parallel REST sink.
     *
-    * One Spark job a day: the tables are schema-guarded upsert targets, so
-    * `StoreRead` serves their footer schemas from its cache, and the
+    * One Spark job a day: the tables are schema-guarded upsert targets
+    * whose schemas `UpsertIgnore` cached when it created them, so
+    * `StoreRead` infers no footer, and the
     * shipped-row count comes back from the sink's own job (no cache, no
     * count). Returns the number of rows shipped; `post` never sees an
     * empty batch (A4 gate, supabase.py:65).

@@ -47,10 +47,6 @@ object Maintenance {
     if (fs.exists(p)) walk(p) else TableStats(0, 0L, 0)
   }
 
-  /** Total data bytes under `path` (recursive, hidden files excluded). */
-  private[graft] def dataBytes(spark: SparkSession, path: String): Long =
-    tableStats(spark, path).bytes
-
   /** Count of data files under `path`, descending into partition dirs. */
   private[graft] def dataFileCount(spark: SparkSession, path: String): Int =
     tableStats(spark, path).files

@@ -33,7 +33,8 @@ import graft.ops.Transforms
   * — never a full-table collect); an absent target then takes one write
   * job. An existing target adds the materialized delta (broadcast build +
   * one checkpoint job that also counts it) and its append, plus one
-  * footer-inference job on the first read of a path in the process.
+  * footer-inference job on the first read of a path in the process that
+  * this sink did not create unpartitioned.
   */
 object UpsertIgnore {
 
@@ -126,10 +127,11 @@ object UpsertIgnore {
       keys: Seq[String],
       pruneCol: Option[String] = None,
       bounds: Option[Row] = None): Unit =
-    if (!targetExists(spark, targetPath))
+    if (!targetExists(spark, targetPath)) {
       WriteLayout.sizedForWrite(incoming).write.mode("append").parquet(targetPath)
-    else {
-      val existingAll = graft.sinks.StoreRead.parquet(spark, targetPath)
+      StoreRead.created(targetPath, incoming.schema)
+    } else {
+      val existingAll = StoreRead.parquet(spark, targetPath)
       SchemaGuard.requireAligned(spark, incoming, existingAll, Nil, targetPath)
       WriteLayout.sizedForWrite(
         deltaPlan(spark, incoming, existingAll, keys, pruneCol, bounds)
@@ -196,7 +198,13 @@ object UpsertIgnore {
         }
       target match {
         case None =>
-          if (total > 0) write(batch, None)
+          if (total > 0) {
+            write(batch, None)
+            // a transactional target is read through its manifest, and a
+            // partitioned one's partition types are inferred from its paths
+            if (!transactional && partitionBy.isEmpty)
+              StoreRead.created(targetPath, batch.schema)
+          }
           Result(total, 0)
         case Some((existingAll, version)) =>
           SchemaGuard.requireAligned(spark, batch, existingAll, partitionBy, targetPath)

@@ -25,6 +25,8 @@ import org.apache.spark.sql.types.StructType
   * cached entry is the VERBATIM first inference (no nullability
   * normalization), so the first read is bit-identical to the uncached
   * form and later reads see the creation-time schema the guards enforce.
+  * A sink that creates a table records its schema with [[created]], as
+  * that inference would return it, so not even the first read infers.
   */
 object StoreRead {
   private val schemaCache =
@@ -35,4 +37,13 @@ object StoreRead {
       p => spark.read.parquet(p).schema)
     spark.read.schema(schema).parquet(path)
   }
+
+  /** `path` was just created, unpartitioned, by writing a frame with
+    * `schema`: cache what inferring its footer would return.
+    */
+  def created(path: String, schema: StructType): Unit =
+    schemaCache.put(path, org.apache.spark.sql.FileSourceSchema(schema))
+
+  private[graft] def cached(path: String): Option[StructType] =
+    Option(schemaCache.get(path))
 }

@@ -1,7 +1,8 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.sinks.{IncrementalRollup, MergeOverwrite, RestSink, Upsert, UpsertIgnore}
+import graft.pipelines.Pipelines
+import graft.sinks.{IncrementalRollup, MergeOverwrite, RestSink, StoreRead, Upsert, UpsertIgnore}
 
 class SinksSpec extends SparkSpec {
   import spark.implicits._
@@ -17,6 +18,23 @@ class SinksSpec extends SparkSpec {
     val r2 = UpsertIgnore(spark, b, dir, Seq("currency", "timestamptz"))
     assert(r2 == UpsertIgnore.Result(inserted = 0, skipped = 2))
     assert(spark.read.parquet(dir).count() == 2)
+  }
+
+  test("K5: a target the sink creates has its schema cached as a fresh read infers it") {
+    val dir = tmpDir("k5prime")
+    // non-nullable fields, nested ones too: a file-source read makes them nullable
+    val df = spark.range(3).select(col("id"), array(col("id")).as("a"),
+      map(lit("k"), col("id")).as("m"), struct(col("id").as("x")).as("s"),
+      col("id").cast("timestamp").cast("timestamp_ntz").as("ts"))
+    UpsertIgnore(spark, df, s"$dir/upsert", Seq("id"))
+    UpsertIgnore.appendAbsent(spark, df, s"$dir/append", Seq("id"))
+    Pipelines.api(spark, () => readFixture("frankfurter_latest.json"),
+      s"$dir/csv", s"$dir/api")
+    Seq("upsert", "append", "api").foreach { t =>
+      val fresh = spark.read.parquet(s"$dir/$t").schema
+      assert(StoreRead.cached(s"$dir/$t").contains(fresh), t)
+    }
+    assert(spark.read.parquet(s"$dir/upsert").schema != df.schema)
   }
 
   test("K5: overlapping batch inserts only the unseen keys") {
