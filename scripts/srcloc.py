@@ -12,11 +12,16 @@ Usage:
 ROOT defaults to `src/main` beside this script's directory. A package is
 the directory of a source file relative to ROOT's `scala/` (or ROOT
 itself), written with dots: `graft.sinks`, `graft.ext`.
+
+Under the per-package table two subtotals split the total: `harness` is
+the entry catalog and its fixtures (`graft.queries`, `graft.fixtures`
+and their subpackages), `engine` is everything else.
 """
 import os
 import sys
 
 COMMENT_MARKERS = ("//", "/*", "*")
+HARNESS_PACKAGES = ("graft.queries", "graft.fixtures")
 SOURCE_SUFFIXES = (".scala", ".java")
 
 
@@ -28,6 +33,10 @@ def code_lines(path):
             if s and not s.startswith(COMMENT_MARKERS):
                 n += 1
     return n
+
+
+def is_harness(pkg):
+    return any(pkg == h or pkg.startswith(h + ".") for h in HARNESS_PACKAGES)
 
 
 def main(argv):
@@ -45,10 +54,14 @@ def main(argv):
             rel = os.path.relpath(dirpath, base)
             pkg = "(root)" if rel == "." else rel.replace(os.sep, ".")
             per_pkg[pkg] = per_pkg.get(pkg, 0) + code_lines(os.path.join(dirpath, name))
-    width = max([len(p) for p in per_pkg] + [len("total")])
+    harness = sum(n for p, n in per_pkg.items() if is_harness(p))
+    total = sum(per_pkg.values())
+    width = max([len(p) for p in per_pkg] + [len("harness")])
     for pkg in sorted(per_pkg):
         print(f"{pkg:<{width}}  {per_pkg[pkg]:>7,}")
-    print(f"{'total':<{width}}  {sum(per_pkg.values()):>7,}")
+    print(f"{'total':<{width}}  {total:>7,}")
+    print(f"{'engine':<{width}}  {total - harness:>7,}")
+    print(f"{'harness':<{width}}  {harness:>7,}")
 
 
 if __name__ == "__main__":

@@ -1,14 +1,13 @@
 package graft.ext
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.sinks.StoreRead
 
-/** [EXT] Persisted AUDIO-fingerprint posting index — the
-  * [[HammingIndex]] persistence discipline (sorted postings, explicit
-  * fan-out, build_meta parameter pinning, append + staleness, takedown
-  * tombstones, stage-aside swap) applied to the landmark-hash store as
-  * an inverted `(fp -> doc_id)` layout. Landmark hashes are EXACT-match
+/** [EXT] Persisted AUDIO-fingerprint posting index: the landmark-hash
+  * store as an inverted `(fp -> doc_id)` layout, on the [[HammingIndex]]
+  * lifecycle (its writer, build_meta, append tail, compaction,
+  * takedown tombstones and stage-aside swap). Landmark hashes are EXACT-match
   * keys (a match shares the literal 64-bit hash, not a Hamming ball),
   * which makes this strictly simpler than the Hamming case: no chunk
   * arithmetic, no bound restriction — one fp-sorted posting table whose
@@ -33,15 +32,15 @@ import org.apache.spark.sql.functions._
   *     narrow min/max fp band and a probe's pushed `fp IN (...)`
   *     predicate prunes at row-group granularity
   *   path/build_meta  "fpparams <frameSize> <hop> <peaksPerFrame>
-  *     <fanout> <windowFrames>\nrows N" — the FINGERPRINT parameters
-  *     are part of the artifact (the bloom_mh<H> / sig_regime
+  *     <fanout> <windowFrames>\nrows N\nfiles F" — the FINGERPRINT
+  *     parameters are part of the artifact (the bloom_mh<H> / sig_regime
   *     discipline): stored hashes and probe hashes must come from the
   *     same landmark arithmetic or recall is silently lost, so [[topK]]
   *     and [[append]] fingerprint with the artifact's parameters, read
   *     from the artifact — a mismatch is impossible, not checked-for
-  *   path/forgotten/  (doc_id) — takedown tombstones ([[HammingIndex]]
-  *     machinery verbatim: probes mask immediately, [[append]] readmits
-  *     explicitly re-given ids, [[build]] clears the set wholesale)
+  *   path/forgotten/  (doc_id) — takedown tombstones: probes mask
+  *     immediately, [[append]] readmits explicitly re-given ids,
+  *     [[build]] clears the set wholesale
   *
   * Pushdown mechanics, measured not assumed (AudioIndexSpec holds probe
   * bytes-read under the full scan via task `inputMetrics.bytesRead`):
@@ -63,6 +62,12 @@ object AudioIndex {
 
   private val What = "audio index"
 
+  /** fp-sorted, unpartitioned postings; `fpparams` pins the landmark
+    * arithmetic, `files` the fan-out.
+    */
+  private val Fp = HammingIndex.Layout(Seq("fp", "doc_id"), Seq("fp"), Nil,
+    "fpparams", "files", 32, _ => 1)
+
   /** Distinct (fp, doc_id) postings of a media frame under `p` —
     * non-audio/undecodable payloads contribute nothing (they can never
     * audio-match; the decode census counts them).
@@ -83,79 +88,26 @@ object AudioIndex {
   def build(spark: SparkSession, media: DataFrame, path: String,
       params: AudioFingerprint.Params = AudioFingerprint.Params(),
       files: Int = 32): Unit =
-    writeArtifact(spark, path, postingsOf(spark, media, params), files,
-      params, dstMayBeAbsent = true)
-
-  /** The one writer both [[build]] and [[compact]] share: fp-sorted
-    * range slices into a staging dir, build_meta (fingerprint params +
-    * row baseline), stage-aside swap.
-    */
-  private def writeArtifact(spark: SparkSession, path: String,
-      postings: DataFrame, files: Int, params: AudioFingerprint.Params,
-      dstMayBeAbsent: Boolean): Unit = {
-    require(files >= 1, s"$What: files $files")
-    val target = new Path(path)
-    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.sinks.SwapUtil.replace(fs, target, What, dstMayBeAbsent) { staging =>
-      // Pin the postings before the range shuffle: repartitionByRange's
-      // bound-sampling job executes the child plan, and the write then
-      // plans it AGAIN (r16 job log: two ~equal jobs for one build —
-      // the upstream here is the full decode+DSP fingerprint pass, the
-      // most expensive stage of the build). The lazy checkpoint
-      // materializes that pass ONCE; sampling, write, and the build_meta
-      // row count all read the cached frame. O(postings) footprint —
-      // the same size class the shuffle itself buffers.
-      val pinned = postings.select(col("fp"), col("doc_id"))
-        .localCheckpoint(false)
-      pinned
-        .repartitionByRange(files, col("fp"))
-        .sortWithinPartitions(col("fp"))
-        .write.mode("overwrite").parquet(s"$staging/postings")
-      val rows = pinned.count()
-      graft.sinks.SwapUtil.writeSynced(fs, new Path(staging, "build_meta"),
-        s"fpparams ${params.frameSize} ${params.hop} " +
-          s"${params.peaksPerFrame} ${params.fanout} ${params.windowFrames}\n" +
-          s"rows $rows\nfiles $files\n")
-    }
-  }
+    HammingIndex.write(postingsOf(spark, media, params), path, Fp,
+      s"${params.frameSize} ${params.hop} ${params.peaksPerFrame} " +
+        s"${params.fanout} ${params.windowFrames}",
+      files, What, mayBeAbsent = true)
 
   /** True when a built artifact exists at `path`. */
   def exists(spark: SparkSession, path: String): Boolean =
     HammingIndex.exists(spark, path)
 
-  /** (fingerprint params, build-time posting rows, build-time file
-    * fan-out) from build_meta — the fan-out is part of the artifact so
-    * [[compact]] restores the layout the index was BUILT at rather
-    * than a hard-coded default (pre-pinning artifacts read the
-    * historical default, 32).
-    */
-  private def metaOf(spark: SparkSession,
-      path: String): (AudioFingerprint.Params, Long, Int) = {
-    val p = new Path(s"$path/build_meta")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(p)
-    val text =
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    val fields = text.linesIterator.flatMap { l =>
-      l.split(" ", 2) match {
-        case Array(k, v) => Some(k -> v.trim)
-        case _ => None
-      }
-    }.toMap
-    val fp = fields.getOrElse("fpparams",
-      sys.error(s"$What at $path: no fpparams in build_meta"))
-      .split(" ").map(_.toInt)
+  private def paramsIn(meta: HammingIndex.Meta,
+      path: String): AudioFingerprint.Params = {
+    val fp = meta.param.split(" ").map(_.toInt)
     require(fp.length == 5, s"$What at $path: malformed fpparams")
-    (AudioFingerprint.Params(frameSize = fp(0), hop = fp(1),
-      peaksPerFrame = fp(2), fanout = fp(3), windowFrames = fp(4)),
-      fields.get("rows").map(_.toLong).getOrElse(0L),
-      fields.get("files").map(_.toInt).getOrElse(32))
+    AudioFingerprint.Params(frameSize = fp(0), hop = fp(1),
+      peaksPerFrame = fp(2), fanout = fp(3), windowFrames = fp(4))
   }
 
   /** The fingerprint parameters the artifact was built with. */
   def paramsOf(spark: SparkSession, path: String): AudioFingerprint.Params =
-    metaOf(spark, path)._1
+    paramsIn(HammingIndex.metaOf(spark, path, Fp, What), path)
 
   /** Takedown: forgotten doc_ids stop ranking in [[topK]] IMMEDIATELY;
     * an explicit re-ingest via [[append]] readmits; [[build]] clears
@@ -174,64 +126,38 @@ object AudioIndex {
     * carrier the way the Hamming layout does); fresh rows append as
     * their own fp-sorted files. Appends degrade pruning gradually, not
     * correctness; `staleness` (appended rows / build-time rows) tells
-    * the caller when to re-run [[build]] and restore the packed layout.
+    * the caller when to re-run [[build]] or [[compact]] and restore the
+    * packed layout.
     */
   def append(spark: SparkSession, media: DataFrame, path: String,
       rebuildThreshold: Double = 0.5): AppendResult = {
-    require(exists(spark, path), s"no $What at $path — build first")
-    val (params, atBuild, _) = metaOf(spark, path)
+    val meta = HammingIndex.metaOf(spark, path, Fp, What)
     val existingIds =
-      graft.sinks.StoreRead.parquet(spark, s"$path/postings").select("doc_id").distinct()
-    val batch = postingsOf(spark, media, params)
+      StoreRead.parquet(spark, s"$path/postings").select("doc_id").distinct()
+    val batch = postingsOf(spark, media, paramsIn(meta, path))
       .localCheckpoint(false) // id set, fresh rows, readmit all read it
     val fresh = batch.join(existingIds, Seq("doc_id"), "left_anti")
       .localCheckpoint(false) // counted AND written
     val freshCount = fresh.count()
     val input = batch.count()
     if (freshCount > 0)
-      fresh
-        .repartitionByRange(
-          math.max(1, (freshCount / 4000000L).toInt + 1), col("fp"))
-        .sortWithinPartitions(col("fp"))
-        .write.mode("append").parquet(s"$path/postings")
-    HammingIndex.readmit(spark, path, batch.select("doc_id").distinct(), What)
-    val total = graft.sinks.StoreRead.parquet(spark, s"$path/postings").count()
-    val staleness =
-      (total - atBuild).toDouble / math.max(atBuild, 1L).toDouble
-    HammingIndex.AppendResult(freshCount, input - freshCount, total,
-      staleness, staleness > rebuildThreshold)
+      HammingIndex.writeSorted(fresh, s"$path/postings", Fp,
+        math.max(1, (freshCount / 4000000L).toInt + 1), "append")
+    HammingIndex.appended(spark, path, batch.select("doc_id").distinct(),
+      freshCount, input, meta, rebuildThreshold, What)
   }
 
-  /** Re-pack the posting layout from the artifact alone — the
-    * [[HammingIndex.compact]] contract on the exact-key layout:
-    * appended files merge back into `files` fp-sorted range slices
-    * (restoring row-group pruning), tombstoned owners erase
-    * PHYSICALLY, the tombstone set clears with the stage-aside swap,
-    * and the build_meta row baseline resets (append staleness restarts
-    * at 0). No media re-fingerprinting: the layout is a pure function
-    * of the postings. The default (0) re-packs at the fan-out the
-    * index was BUILT at, read from build_meta — a maintenance pass
-    * never silently changes the pruning granularity. Returns
-    * (filesBefore, filesAfter).
+  /** Re-pack the posting layout from the artifact alone — see
+    * [[HammingIndex.compact]]: appended files merge back into `files`
+    * fp-sorted range slices (restoring row-group pruning), tombstoned
+    * owners erase PHYSICALLY, the tombstone set clears with the swap,
+    * and append staleness restarts at 0. No media re-fingerprinting.
+    * The default (0) re-packs at the fan-out the index was BUILT at.
+    * Returns (filesBefore, filesAfter).
     */
   def compact(spark: SparkSession, path: String,
-      files: Int = 0): (Int, Int) = {
-    require(exists(spark, path), s"no $What at $path — build first")
-    require(files >= 0, s"$What: files $files (0 = build-time fan-out)")
-    val (params, _, builtFiles) = metaOf(spark, path)
-    val fanout = if (files == 0) builtFiles else files
-    val target = new Path(path)
-    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val before = HammingIndex.partFileCount(fs, new Path(s"$path/postings"))
-    val live = HammingIndex.tombstones(spark, path).foldLeft(
-        graft.sinks.StoreRead.parquet(spark, s"$path/postings"))((p, ts) =>
-      p.join(broadcast(ts), Seq("doc_id"), "left_anti"))
-    // fully-tombstoned: keep the mask, advise rebuild/delete — see
-    // HammingIndex.compact (an empty artifact has no schema to probe)
-    if (live.isEmpty) return (before, before)
-    writeArtifact(spark, path, live, fanout, params, dstMayBeAbsent = false)
-    (before, HammingIndex.partFileCount(fs, new Path(s"$path/postings")))
-  }
+      files: Int = 0): (Int, Int) =
+    HammingIndex.compact(spark, path, Fp, files, What)
 
   /** Query-by-example audio search against the persisted index: for
     * each probe recording, the k stored documents sharing the most
@@ -246,8 +172,7 @@ object AudioIndex {
       minShared: Int = AudioFingerprint.Params().minShared,
       maxProbeFps: Int = 262144): DataFrame = {
     require(k > 0, s"$What: k must be positive, got $k")
-    require(exists(spark, path), s"no $What at $path — build first")
-    val (params, _, _) = metaOf(spark, path)
+    val params = paramsOf(spark, path)
     import spark.implicits._
     val qfps = AudioFingerprint.fingerprints(spark, probes, params)
       .select(col("doc_id").as("q_id"), col("fp"))
@@ -271,7 +196,7 @@ object AudioIndex {
     s2.conf.set("spark.sql.parquet.pushdown.inFilterThreshold",
       math.max(fpVals.length, 10).toString)
     val probeDf = s2.createDataFrame(qfps.toSeq).toDF("q_id", "fp")
-    val cand0 = graft.sinks.StoreRead.parquet(s2, s"$path/postings")
+    val cand0 = StoreRead.parquet(s2, s"$path/postings")
       .filter(col("fp").isInCollection(fpVals))
       .join(broadcast(probeDf), Seq("fp"))
       .groupBy(col("q_id"), col("doc_id"))

@@ -153,12 +153,11 @@ object Bm25 {
   private def readConstants(spark: org.apache.spark.sql.SparkSession,
       path: String): (Long, Double, String) = {
     val p = new org.apache.hadoop.fs.Path(path, "_constants")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(p), s"Bm25.searchIndexed: no index at $path " +
+    val found = graft.sinks.SwapUtil.readText(
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
+    require(found.isDefined, s"Bm25.searchIndexed: no index at $path " +
       "(_constants sidecar missing) — run buildIndex first")
-    val in = fs.open(p)
-    val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
+    val txt = found.get
     val get = (k: String) =>
       s""""$k":\\s*("?)([^,}"]+)\\1""".r.findFirstMatchIn(txt)
         .getOrElse(sys.error(s"Bm25 _constants: missing $k in $txt"))

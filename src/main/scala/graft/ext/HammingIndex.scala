@@ -3,16 +3,22 @@ package graft.ext
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.sinks.{StoreRead, SwapUtil}
 
-/** [EXT] Persisted Hamming-space posting layout over ANY 64-bit
-  * signature column — the shared core behind [[ImageIndex]] (perceptual
-  * dHash) and [[SimhashIndex]] (text SimHash). One artifact design, two
-  * modalities: a one-time layout pass that lets bounded-distance search
-  * read a PRUNED slice of the corpus instead of scanning it.
+/** [EXT] Persisted posting indexes: the one lifecycle — build, append,
+  * takedown, compaction, probe — of the serving indexes
+  * [[SimhashIndex]] (text SimHash), [[ImageIndex]] (perceptual dHash)
+  * and [[AudioIndex]] (landmark hashes). The shared steps — the writer,
+  * build_meta, the compaction skeleton, the append tail, tombstones and
+  * readmission — take a [[Layout]] as data and never ask which index
+  * calls; each index derives its own postings and decides which ids
+  * already exist. This file also holds the Hamming layout and its
+  * probe: bounded-distance search over ANY 64-bit signature column that
+  * reads a PRUNED slice of the corpus instead of scanning it.
   *
-  * Layout = multi-index pigeonhole postings (the blocking arithmetic of
-  * `Dedup.hammingCandidates` / the incremental stores, made DURABLE and
-  * SORTED):
+  * Hamming layout = multi-index pigeonhole postings (the blocking
+  * arithmetic of `Dedup.hammingCandidates` / the incremental stores,
+  * made DURABLE and SORTED):
   *
   *   path/postings/chunk=<c>/   (cval, doc_id, sh) — one posting per
   *     (signature, chunk); files within each chunk partition are
@@ -20,10 +26,11 @@ import org.apache.spark.sql.functions._
   *     covers a narrow cval band and a probe's `cval IN (...)` pushed
   *     filter prunes at row-group granularity, not just directory
   *     granularity
-  *   path/build_meta            "maxhamming H\nrows N" — the blocking
-  *     parameter is part of the artifact (a probe at a different bound
-  *     would silently lose recall; reading it from the artifact makes
-  *     that impossible)
+  *   path/build_meta            "maxhamming H\nrows N\nfilesperchunk F"
+  *     — the blocking parameter is part of the artifact (a probe at a
+  *     different bound would silently lose recall; reading it from the
+  *     artifact makes that impossible)
+  *   path/forgotten/            (doc_id) — takedown tombstones
   *
   * Space is the classic multi-index-hashing trade: (maxHamming+1) rows
   * per signature, ~20 bytes each. A probe touches only the row groups
@@ -41,25 +48,63 @@ import org.apache.spark.sql.functions._
   * Hamming verification on the carried `sh` then makes the result EQUAL
   * to the exhaustive top-k restricted to the bound (the
   * `ext_image_index_topk` gate holds that equality against the
-  * brute-force DuckDB oracle for the image wrapper; the simhash wrapper
-  * shares every line of this machinery and holds the same equality
-  * in-engine — SimhashIndexSpec). Deliberately NOT an approximate
-  * recall trade: a takedown/compliance search ("find every stored
-  * near-copy") needs the guarantee.
+  * brute-force DuckDB oracle for the image index; SimhashIndexSpec
+  * holds the same equality in-engine for the text index). Deliberately
+  * NOT an approximate recall trade: a takedown/compliance search ("find
+  * every stored near-copy") needs the guarantee.
   */
 private[ext] object HammingIndex {
 
+  /** How an index's postings sit on disk, as data: the columns written
+    * (in file order), the range-partition and sort key, the directory
+    * partitioning, the build_meta keys of the index's parameter line and
+    * of its fan-out (with the fan-out an artifact written before fan-out
+    * pinning reads), and the range slices per unit of fan-out, a
+    * function of the parameter. Two layouts exist: [[Chunked]] here and
+    * `AudioIndex`'s exact-key fp layout.
+    */
+  final case class Layout(
+      cols: Seq[String],
+      key: Seq[String],
+      partitionBy: Seq[String],
+      paramKey: String,
+      fanoutKey: String,
+      legacyFanout: Int,
+      slicesPerFanout: String => Int)
+
+  /** The Hamming layout: postings partitioned by `chunk`, sorted by
+    * (chunk, cval); `maxhamming H` pins the bound, H+1 chunks of
+    * `filesperchunk` slices each.
+    */
+  val Chunked: Layout = Layout(Seq("chunk", "cval", "doc_id", "sh"),
+    Seq("chunk", "cval"), Seq("chunk"), "maxhamming", "filesperchunk", 8,
+    h => h.toInt + 1)
+
+  /** build_meta, parsed: the value of the layout's parameter line, the
+    * posting rows at the last layout pass (the staleness baseline, which
+    * appends do not move) and the fan-out the layout was written at.
+    */
+  final case class Meta(param: String, rows: Long, fanout: Int)
+
+  /** The `(chunk, cval, doc_id, sh)` postings of a `(doc_id, sh)`
+    * signature frame: one per (signature, chunk).
+    */
+  private def chunked(sig: DataFrame, maxHamming: Int): DataFrame =
+    sig.select(col("doc_id"), col("sh"),
+        explode(Dedup.shChunks(col("sh"), maxHamming)).as("cc"))
+      .select(col("cc.chunk").as("chunk"), col("cc.cval").as("cval"),
+        col("doc_id"), col("sh"))
+
   /** Persist the posting layout for a `(doc_id, sh)` signature frame
-    * (null signatures must already be filtered). One pass: explode the
-    * maxHamming+1 chunks, range-sort by (chunk, cval), write
-    * partitioned by chunk with an EXPLICIT fan-out — pruning
-    * granularity IS the file/row-group count per chunk directory. A
-    * range partition covering a whole chunk (what the conf default
-    * degenerates to on a small build) has min=0/max=everything cval
-    * stats and can prune nothing; `filesPerChunk` sorted range slices
-    * give every file a narrow cval band (huge builds additionally
-    * split into 128 MB row groups inside each file, so granularity
-    * scales with the corpus either way).
+    * (null signatures must already be filtered), partitioned by chunk
+    * with an EXPLICIT fan-out — pruning granularity IS the
+    * file/row-group count per chunk directory. A range partition
+    * covering a whole chunk (what the conf default degenerates to on a
+    * small build) has min=0/max=everything cval stats and can prune
+    * nothing; `filesPerChunk` sorted range slices give every file a
+    * narrow cval band (huge builds additionally split into 128 MB row
+    * groups inside each file, so granularity scales with the corpus
+    * either way).
     */
   def build(sig: DataFrame, path: String, maxHamming: Int,
       filesPerChunk: Int, what: String, exhaustiveHint: String): Unit = {
@@ -67,36 +112,48 @@ private[ext] object HammingIndex {
       s"$what: maxHamming must be 0..7 (>= 8 bits per chunk) so the " +
         s"layout can prune; at $maxHamming an exhaustive scan is the " +
         s"better plan — use $exhaustiveHint")
-    require(filesPerChunk >= 1, s"$what: filesPerChunk $filesPerChunk")
-    val spark = sig.sparkSession
-    val postings = sig
-      .select(col("doc_id"), col("sh"),
-        explode(Dedup.shChunks(col("sh"), maxHamming)).as("cc"))
-      .select(col("cc.chunk").as("chunk"), col("cc.cval").as("cval"),
-        col("doc_id"), col("sh"))
+    write(chunked(sig, maxHamming), path, Chunked, maxHamming.toString,
+      filesPerChunk, what, mayBeAbsent = true)
+  }
+
+  /** The one posting writer, for build and compaction alike: pin the
+    * postings, range-partition and sort them by the layout's key into
+    * `fanout` slices per unit, write them into the swap's staging dir
+    * with build_meta (`param`, the row count, the fan-out) beside them.
+    * The pin matters: the range shuffle's bound-sampling job and the
+    * write would otherwise each execute the upstream plan — for a build
+    * that is the full signature or fingerprint pass of the corpus. One
+    * materialization serves sampling, write and the row count.
+    */
+  private[ext] def write(postings: DataFrame, path: String, layout: Layout,
+      param: String, fanout: Int, what: String, mayBeAbsent: Boolean): Unit = {
+    require(fanout >= 1, s"$what: ${layout.fanoutKey} $fanout")
     val target = new Path(path)
-    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.sinks.SwapUtil.replace(fs, target, what, mayBeAbsent = true) { staging =>
-      // Pin before the range shuffle (the AudioIndex.writeArtifact
-      // discipline): the bound-sampling job and the write would otherwise
-      // each execute the signature pass — for the image index that is the
-      // full pixel-decode + dHash of the corpus. One materialization
-      // serves sampling, write, and the build_meta row count.
-      val pinned = postings.localCheckpoint(false)
-      pinned
-        .repartitionByRange((maxHamming + 1) * filesPerChunk,
-          col("chunk"), col("cval"))
-        .sortWithinPartitions(col("chunk"), col("cval"))
-        .write.mode("overwrite").partitionBy("chunk")
-        .parquet(s"$staging/postings")
-      writeMeta(fs, staging, maxHamming, pinned.count(), filesPerChunk)
+    val fs = target.getFileSystem(
+      postings.sparkSession.sparkContext.hadoopConfiguration)
+    SwapUtil.replace(fs, target, what, mayBeAbsent) { staging =>
+      val pinned = postings.select(layout.cols.map(col): _*)
+        .localCheckpoint(false)
+      writeSorted(pinned, s"$staging/postings", layout,
+        layout.slicesPerFanout(param) * fanout, "overwrite")
+      SwapUtil.writeSynced(fs, new Path(staging, "build_meta"),
+        s"${layout.paramKey} $param\nrows ${pinned.count()}\n" +
+          s"${layout.fanoutKey} $fanout\n")
     }
   }
 
-  private def writeMeta(fs: org.apache.hadoop.fs.FileSystem, dir: Path,
-      maxHamming: Int, rows: Long, filesPerChunk: Int): Unit =
-    graft.sinks.SwapUtil.writeSynced(fs, new Path(dir, "build_meta"),
-      s"maxhamming $maxHamming\nrows $rows\nfilesperchunk $filesPerChunk\n")
+  /** `slices` range slices of `postings`, each sorted by the layout's
+    * key, so every file and row group covers a narrow key band that a
+    * probe's pushed `IN` predicate prunes on.
+    */
+  private[ext] def writeSorted(postings: DataFrame, dir: String,
+      layout: Layout, slices: Int, mode: String): Unit = {
+    val key = layout.key.map(col)
+    postings.repartitionByRange(slices, key: _*)
+      .sortWithinPartitions(key: _*)
+      .write.mode(mode).partitionBy(layout.partitionBy: _*)
+      .parquet(dir)
+  }
 
   /** True when a built artifact exists at `path` (build_meta is staged
     * with the postings, so its presence implies the whole layout). A
@@ -104,53 +161,48 @@ private[ext] object HammingIndex {
     * artifact parked, intact, at its backup name.
     */
   def exists(spark: SparkSession, path: String): Boolean = {
-    val (fs, root) = graft.sinks.SwapUtil.healed(spark, path)
+    val (fs, root) = SwapUtil.healed(spark, path)
     fs.exists(new Path(root, "build_meta"))
   }
 
-  /** The blocking bound the artifact was built at (from build_meta). */
-  def boundOf(spark: SparkSession, path: String, what: String): Int =
-    metaOf(spark, path, what)._1
-
-  /** (maxHamming, build-time posting rows, build-time fan-out) from
-    * build_meta. The row count is the staleness denominator for
-    * [[append]] — it records the last full LAYOUT pass, so it does not
-    * move on appends. The fan-out is part of the artifact so a
-    * maintenance [[compact]] restores the layout the index was BUILT
-    * at, not a hard-coded default (an artifact written before fan-out
-    * pinning reads the historical default, 8).
+  /** The artifact's build_meta, read after healing a parked artifact —
+    * every probe, append and compaction starts here, so none of them
+    * reads a crashed swap's leftovers. The fan-out is part of the
+    * artifact so a compaction restores the layout the index was BUILT
+    * at; an artifact written before fan-out pinning reads the layout's
+    * legacy default.
     */
-  private def metaOf(spark: SparkSession, path: String,
-      what: String): (Int, Long, Int) = {
-    val p = new Path(s"$path/build_meta")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(p)
-    val text =
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    val fields = text.linesIterator.flatMap { l =>
+  private[ext] def metaOf(spark: SparkSession, path: String, layout: Layout,
+      what: String): Meta = {
+    val (fs, root) = SwapUtil.healed(spark, path)
+    val text = SwapUtil.readText(fs, new Path(root, "build_meta"))
+    require(text.isDefined, s"no $what at $path — build first")
+    val fields = text.get.linesIterator.flatMap { l =>
       l.split(" ", 2) match {
         case Array(k, v) => Some(k -> v.trim)
         case _ => None
       }
     }.toMap
-    (fields.get("maxhamming").map(_.toInt).getOrElse(
-        sys.error(s"$what at $path: no maxhamming in build_meta")),
+    Meta(fields.getOrElse(layout.paramKey,
+        sys.error(s"$what at $path: no ${layout.paramKey} in build_meta")),
       fields.get("rows").map(_.toLong).getOrElse(0L),
-      fields.get("filesperchunk").map(_.toInt).getOrElse(8))
+      fields.get(layout.fanoutKey).map(_.toInt).getOrElse(layout.legacyFanout))
   }
+
+  /** The blocking bound the artifact was built at (from build_meta). */
+  def boundOf(spark: SparkSession, path: String, what: String): Int =
+    metaOf(spark, path, Chunked, what).param.toInt
 
   /** Takedown support — the index artifacts live under the SAME
     * erasure surface as the durable stores: forgetting doc_ids is an
-    * O(takedown) tombstone append under `path/forgotten`; [[topK]]
-    * masks them immediately (the compliance property: a taken-down
-    * item is unfindable the moment the tombstone lands, no rebuild
-    * wait), [[append]] READMITS any id it is explicitly re-given (the
-    * store family's takedown-then-re-ingest semantics), and [[build]]
-    * clears the set wholesale — the stage-aside swap replaces the
-    * whole artifact directory, tombstones included, at exactly the
-    * moment the postings are rewritten from the (already-curated)
-    * corpus anyway.
+    * O(takedown) tombstone append under `path/forgotten`; the probes
+    * mask them immediately (the compliance property: a taken-down item
+    * is unfindable the moment the tombstone lands, no rebuild wait), an
+    * append READMITS any id it is explicitly re-given (the store
+    * family's takedown-then-re-ingest semantics), and a build clears the
+    * set wholesale — the stage-aside swap replaces the whole artifact
+    * directory, tombstones included, at exactly the moment the postings
+    * are rewritten from the (already-curated) corpus anyway.
     */
   def forget(spark: SparkSession, path: String, ids: DataFrame,
       what: String): Unit = {
@@ -167,7 +219,7 @@ private[ext] object HammingIndex {
     * anywhere converges on replay: the batch anti-joins away on the
     * postings side and the readmit re-runs here.
     */
-  private[ext] def readmit(spark: SparkSession, path: String,
+  private def readmit(spark: SparkSession, path: String,
       batchIds: DataFrame, what: String): Unit =
     tombstones(spark, path).foreach { ts =>
       val hit = ts.join(broadcast(batchIds.select("doc_id")), Seq("doc_id"))
@@ -180,7 +232,7 @@ private[ext] object HammingIndex {
           .localCheckpoint(false) // sever from the dir being replaced
         if (remaining.isEmpty) fs.delete(target, true)
         else
-          graft.sinks.SwapUtil.replace(fs, target, s"$what tombstones",
+          SwapUtil.replace(fs, target, s"$what tombstones",
             mayBeAbsent = true)(
             dir => remaining.coalesce(1).write.parquet(dir.toString))
         ()
@@ -191,11 +243,26 @@ private[ext] object HammingIndex {
       appended: Long, skipped: Long, totalPostings: Long,
       staleness: Double, rebuildAdvised: Boolean)
 
+  /** The tail every append shares, after the index wrote its fresh
+    * postings: readmit the batch's ids (an explicit re-ingest lifts a
+    * takedown), count the postings, and measure staleness — appended
+    * rows over the build-time rows — against the rebuild threshold.
+    */
+  private[ext] def appended(spark: SparkSession, path: String,
+      batchIds: DataFrame, fresh: Long, input: Long, meta: Meta,
+      rebuildThreshold: Double, what: String): AppendResult = {
+    readmit(spark, path, batchIds, what)
+    val total = StoreRead.parquet(spark, s"$path/postings").count()
+    val staleness =
+      (total - meta.rows).toDouble / math.max(meta.rows, 1L).toDouble
+    AppendResult(fresh, input - fresh, total, staleness,
+      staleness > rebuildThreshold)
+  }
+
   /** Parquet part files under `dir`, recursively — the compaction
     * before/after measure (pruning granularity IS the file count).
-    * Shared with [[AudioIndex]]'s compactor.
     */
-  private[ext] def partFileCount(fs: org.apache.hadoop.fs.FileSystem,
+  private def partFileCount(fs: org.apache.hadoop.fs.FileSystem,
       dir: Path): Int = {
     if (!fs.exists(dir)) return 0
     var n = 0
@@ -209,50 +276,34 @@ private[ext] object HammingIndex {
   /** Re-pack the posting layout from the ARTIFACT alone — no source
     * corpus, no re-hashing: the packed layout is a pure function of
     * the postings, so compaction reads them, drops tombstoned owners
-    * PHYSICALLY, and rewrites the `filesPerChunk` cval-sorted range
-    * slices per chunk that [[build]] writes (restoring the pruning
-    * granularity appends degrade). The stage-aside swap replaces the
-    * whole artifact — tombstones clear with it, exactly like a rebuild
-    * — and build_meta's row baseline resets, so append staleness
-    * restarts at 0. This is what the stores' `compactStore` is to the
-    * store family: the maintenance half of the takedown contract,
-    * now covering the serving indexes too. Returns
-    * (postingFilesBefore, postingFilesAfter).
+    * PHYSICALLY, and rewrites them through the build's writer (restoring
+    * the pruning granularity appends degrade). The stage-aside swap
+    * replaces the whole artifact — tombstones clear with it, exactly
+    * like a rebuild — and build_meta's row baseline resets, so append
+    * staleness restarts at 0. `fanout` 0 re-packs at the fan-out the
+    * index was BUILT at (from build_meta), so a maintenance pass over
+    * many indexes never silently changes any one index's pruning
+    * granularity. Returns (postingFilesBefore, postingFilesAfter).
     */
-  def compact(spark: SparkSession, path: String, filesPerChunk: Int,
-      what: String): (Int, Int) = {
-    require(exists(spark, path), s"no $what at $path — build first")
-    require(filesPerChunk >= 0,
-      s"$what: filesPerChunk $filesPerChunk (0 = the build-time fan-out)")
-    val (maxHamming, _, builtFanout) = metaOf(spark, path, what)
-    // 0 = "re-pack at the fan-out the index was BUILT at" (from
-    // build_meta) — so a maintenance pass over many indexes never
-    // silently changes any one index's pruning granularity
-    val fanout =
-      if (filesPerChunk == 0) builtFanout else filesPerChunk
-    val target = new Path(path)
-    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val before = partFileCount(fs, new Path(s"$path/postings"))
+  def compact(spark: SparkSession, path: String, layout: Layout,
+      fanout: Int, what: String): (Int, Int) = {
+    val meta = metaOf(spark, path, layout, what)
+    require(fanout >= 0,
+      s"$what: ${layout.fanoutKey} $fanout (0 = the build-time fan-out)")
+    val postings = new Path(s"$path/postings")
+    val fs = postings.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val before = partFileCount(fs, postings)
     val live = tombstones(spark, path).foldLeft(
-        graft.sinks.StoreRead.parquet(spark, s"$path/postings"))((p, ts) =>
+        StoreRead.parquet(spark, s"$path/postings"))((p, ts) =>
       p.join(broadcast(ts), Seq("doc_id"), "left_anti"))
     // a fully-tombstoned index cannot compact to a representable
-    // artifact (an empty partitioned parquet tree has no schema to
-    // probe) — leave the mask in place and tell the caller to rebuild
-    // or delete; probes keep returning nothing, which is correct
+    // artifact (an empty parquet tree has no schema to probe) — leave
+    // the mask in place and tell the caller to rebuild or delete;
+    // probes keep returning nothing, which is correct
     if (live.isEmpty) return (before, before)
-    graft.sinks.SwapUtil.replace(fs, target, what) { staging =>
-      live
-        .select(col("chunk"), col("cval"), col("doc_id"), col("sh"))
-        .repartitionByRange((maxHamming + 1) * fanout,
-          col("chunk"), col("cval"))
-        .sortWithinPartitions(col("chunk"), col("cval"))
-        .write.mode("overwrite").partitionBy("chunk")
-        .parquet(s"$staging/postings")
-      writeMeta(fs, staging, maxHamming,
-        spark.read.parquet(s"$staging/postings").count(), fanout)
-    }
-    (before, partFileCount(fs, new Path(s"$path/postings")))
+    write(live, path, layout, meta.param,
+      if (fanout == 0) meta.fanout else fanout, what, mayBeAbsent = false)
+    (before, partFileCount(fs, postings))
   }
 
   /** Incrementally grow the index with a `(doc_id, sh)` batch — the
@@ -264,38 +315,27 @@ private[ext] object HammingIndex {
     * Appends degrade pruning gradually, not correctness: each appended
     * file carries its own narrow cval band, but file COUNT grows per
     * batch, so `staleness` (appended rows / build-time rows) tells the
-    * caller when to re-run [[build]] and restore the packed layout —
-    * the same rebuild-economics contract as the IVF artifact. Probe
-    * results are unaffected by replays: a re-appended batch anti-joins
-    * away, and [[topK]]'s per-pair dropDuplicates absorbs any residue.
+    * caller when to re-run [[build]] or [[compact]] and restore the
+    * packed layout — the same rebuild-economics contract as the IVF
+    * artifact. Probe results are unaffected by replays: a re-appended
+    * batch anti-joins away, and [[topK]]'s per-pair dropDuplicates
+    * absorbs any residue.
     */
   def append(sig: DataFrame, path: String, rebuildThreshold: Double,
       what: String): AppendResult = {
     val spark = sig.sparkSession
-    require(exists(spark, path), s"no $what at $path — build first")
-    val (maxHamming, atBuild, _) = metaOf(spark, path, what)
+    val meta = metaOf(spark, path, Chunked, what)
+    val maxHamming = meta.param.toInt
     val existingIds =
-      graft.sinks.StoreRead.parquet(spark, s"$path/postings/chunk=0").select("doc_id")
+      StoreRead.parquet(spark, s"$path/postings/chunk=0").select("doc_id")
     val fresh = sig.join(existingIds, Seq("doc_id"), "left_anti")
       .localCheckpoint(false) // counted AND written
     val freshCount = fresh.count()
     val input = sig.count()
     if (freshCount > 0)
-      fresh
-        .select(col("doc_id"), col("sh"),
-          explode(Dedup.shChunks(col("sh"), maxHamming)).as("cc"))
-        .select(col("cc.chunk").as("chunk"), col("cc.cval").as("cval"),
-          col("doc_id"), col("sh"))
-        .repartitionByRange(maxHamming + 1, col("chunk"), col("cval"))
-        .sortWithinPartitions(col("chunk"), col("cval"))
-        .write.mode("append").partitionBy("chunk")
-        .parquet(s"$path/postings")
-    readmit(spark, path, sig, what) // explicit re-ingest lifts takedown
-    val total = graft.sinks.StoreRead.parquet(spark, s"$path/postings").count()
-    val staleness =
-      (total - atBuild).toDouble / math.max(atBuild, 1L).toDouble
-    AppendResult(freshCount, input - freshCount, total, staleness,
-      staleness > rebuildThreshold)
+      writeSorted(chunked(fresh, maxHamming), s"$path/postings", Chunked,
+        maxHamming + 1, "append")
+    appended(spark, path, sig, freshCount, input, meta, rebuildThreshold, what)
   }
 
   /** Bounded-distance top-k against the persisted layout for a BOUNDED
@@ -330,7 +370,7 @@ private[ext] object HammingIndex {
       else (sh >>> (c * chunkBits)) & ((1L << chunkBits) - 1)
     val parts = (0 until nChunks).map { c =>
       val vals = qs.map(r => cvalOf(r._2, c)).distinct.toSeq
-      graft.sinks.StoreRead.parquet(spark, s"$path/postings/chunk=$c")
+      StoreRead.parquet(spark, s"$path/postings/chunk=$c")
         .filter(col("cval").isInCollection(vals))
         .select(lit(c).as("chunk"), col("cval"), col("doc_id"), col("sh"))
     }

@@ -81,7 +81,8 @@ object ImageIndex {
     */
   def compact(spark: SparkSession, path: String,
       filesPerChunk: Int = 0): (Int, Int) =
-    HammingIndex.compact(spark, path, filesPerChunk, What)
+    HammingIndex.compact(spark, path, HammingIndex.Chunked, filesPerChunk,
+      What)
 
   /** Bounded-distance top-k against the persisted index: for each probe
     * image, the k nearest corpus images WITHIN the index's Hamming

@@ -69,13 +69,8 @@ object IncrementalDedup {
   private[graft] def storedFamily(
       spark: SparkSession, storePath: String): Option[String] = {
     val p = new Path(storePath, FamilyFile)
-    val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!f.exists(p)) None
-    else {
-      val in = f.open(p)
-      try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim)
-      finally in.close()
-    }
+    graft.sinks.SwapUtil.readText(
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration), p).map(_.trim)
   }
 
   private def writeFamily(

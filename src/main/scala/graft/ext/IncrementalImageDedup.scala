@@ -124,14 +124,8 @@ object IncrementalImageDedup {
       params: Params): Unit = {
     val expected = sigRegime(params.normalizeOrientation)
     val p = regimePath(storePath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val found =
-      if (!fs.exists(p)) None
-      else {
-        val in = fs.open(p)
-        try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim)
-        finally in.close()
-      }
+    val found = graft.sinks.SwapUtil.readText(
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration), p).map(_.trim)
     require(found.contains(expected),
       s"image store at $storePath holds '${found.getOrElse("<no marker>")}' " +
         s"signatures but this build probes with '$expected' — re-crawled " +

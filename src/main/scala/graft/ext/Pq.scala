@@ -409,32 +409,26 @@ object Pq {
 
   // ------------------------------------------- durable PQ artifact
 
-  /** O(1)-ish content token of an artifact's assignments table (file
-    * names + lengths + mtimes, recursive listing, no job) — the
-    * fingerprint the PQ layer is pinned against: a rebuild OR an
-    * `ivfAppendPersisted` changes the listing, so stale codes can never
-    * silently serve a probe.
+  /** O(1)-ish content token of an artifact's assignments table (the
+    * recursive `SwapUtil.listingToken`, no job) — the fingerprint the PQ
+    * layer is pinned against: a rebuild OR an `ivfAppendPersisted`
+    * changes the listing, so stale codes can never silently serve a
+    * probe.
     */
   private def assignmentsToken(
       spark: org.apache.spark.sql.SparkSession, ivfPath: String): String = {
     val p = new org.apache.hadoop.fs.Path(s"$ivfPath/assignments")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val it = fs.listFiles(p, true)
-    val buf = scala.collection.mutable.ArrayBuffer.empty[String]
-    while (it.hasNext) {
-      val st = it.next()
-      buf += s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}"
-    }
-    buf.sorted.mkString("|")
+    graft.sinks.SwapUtil.listingToken(
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration), p,
+      recursive = true)
   }
 
   private def pqToken(
       spark: org.apache.spark.sql.SparkSession, pqPath: String): String = {
     val p = new org.apache.hadoop.fs.Path(s"$pqPath/codebooks")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.listStatus(p)
-      .map(st => s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}")
-      .sorted.mkString("|")
+    graft.sinks.SwapUtil.listingToken(
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration), p,
+      recursive = false)
   }
 
   /** Driver cache of loaded artifact codebooks (m*k*subDim doubles per
@@ -495,23 +489,24 @@ object Pq {
     cb
   }
 
-  /** True when a durable PQ layer exists at `ivfPath/pq`. An attach
-    * whose swap crashed between its renames left the layer parked,
-    * intact, at its backup name; it is restored first.
+  /** True when a durable PQ layer exists at `ivfPath/pq`. A swap that
+    * crashed between its renames — of the IVF artifact or of the layer —
+    * left it parked, intact, at its backup name; both are restored
+    * first, the artifact before the layer under it.
     */
   def pqAttached(
       spark: org.apache.spark.sql.SparkSession, ivfPath: String): Boolean = {
+    graft.sinks.SwapUtil.healed(spark, ivfPath)
     val (fs, pq) = graft.sinks.SwapUtil.healed(spark, s"$ivfPath/pq")
     fs.exists(new org.apache.hadoop.fs.Path(pq, "meta"))
   }
 
-  private def pinnedToken(
-      spark: org.apache.spark.sql.SparkSession, pqPath: String): String = {
+  /** The assignments token `pq/meta` pins, or None without a layer. */
+  private def pinnedToken(spark: org.apache.spark.sql.SparkSession,
+      pqPath: String): Option[String] = {
     val metaP = new org.apache.hadoop.fs.Path(s"$pqPath/meta")
-    val fs = metaP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(metaP)
-    try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-    finally in.close()
+    graft.sinks.SwapUtil.readText(
+      metaP.getFileSystem(spark.sparkContext.hadoopConfiguration), metaP)
   }
 
   /** True when the PQ layer exists AND still pins the current
@@ -522,7 +517,8 @@ object Pq {
   def pqFresh(
       spark: org.apache.spark.sql.SparkSession, ivfPath: String): Boolean =
     pqAttached(spark, ivfPath) &&
-      pinnedToken(spark, s"$ivfPath/pq") == assignmentsToken(spark, ivfPath)
+      pinnedToken(spark, s"$ivfPath/pq")
+        .contains(assignmentsToken(spark, ivfPath))
 
   /** Re-pin `pq/meta` to the CURRENT assignments fingerprint — the
     * closing step of a maintenance pass (ivfForgetPersisted) that
@@ -650,7 +646,8 @@ object Pq {
     val pqPath = s"$ivfPath/pq"
     require(pqAttached(spark, ivfPath),
       s"no PQ layer at $pqPath — run pqAttachPersisted first")
-    if (pinnedToken(spark, pqPath) != assignmentsToken(spark, ivfPath))
+    if (!pinnedToken(spark, pqPath)
+        .contains(assignmentsToken(spark, ivfPath)))
       throw new IllegalStateException(
         s"PQ codes at $pqPath are STALE: the assignments table changed " +
           "(rebuild or ivfAppendPersisted) after pqAttachPersisted — " +

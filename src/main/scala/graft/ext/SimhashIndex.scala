@@ -94,7 +94,8 @@ object SimhashIndex {
     */
   def compact(spark: SparkSession, path: String,
       filesPerChunk: Int = 0): (Int, Int) =
-    HammingIndex.compact(spark, path, filesPerChunk, What)
+    HammingIndex.compact(spark, path, HammingIndex.Chunked, filesPerChunk,
+      What)
 
   /** Bounded-distance top-k against the persisted index: for each probe
     * document, the k nearest corpus documents WITHIN the index's

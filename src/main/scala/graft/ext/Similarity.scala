@@ -511,7 +511,7 @@ object Similarity {
       val rows = spark.read.parquet(s"$staging/assignments").count()
       writeBuildRows(fs, new org.apache.hadoop.fs.Path(staging, "build_meta"), rows)
     }
-    centroidCache.put((path, centroidToken(spark, path)), cents)
+    centroidCache.put((path, centroidToken(fs, target)), cents)
     ()
   }
 
@@ -524,15 +524,8 @@ object Similarity {
   private def readBuildRows(
       spark: SparkSession, path: String): Option[Long] = {
     val (fs, root) = graft.sinks.SwapUtil.healed(spark, path)
-    val p = new org.apache.hadoop.fs.Path(root, "build_meta")
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val text =
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-        finally in.close()
-      Some(text.stripPrefix("rows ").toLong)
-    }
+    graft.sinks.SwapUtil.readText(fs, new org.apache.hadoop.fs.Path(root, "build_meta"))
+      .map(_.trim.stripPrefix("rows ").toLong)
   }
 
   /** Driver-side cache of persisted-index centroid METADATA (nCentroids ×
@@ -550,16 +543,12 @@ object Similarity {
     scala.collection.concurrent.TrieMap.empty[(String, String), Array[IvfCentroid]]
 
   /** O(1) content token for a persisted index's centroid metadata: the
-    * centroids directory's file names + lengths + mtimes (one listStatus,
-    * no job — the same fingerprint convention as ExtQueries.corpusFp).
+    * centroids directory's listing token (`SwapUtil.listingToken`).
     */
-  private def centroidToken(spark: SparkSession, path: String): String = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/centroids")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.listStatus(p)
-      .map(st => s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}")
-      .sorted.mkString("|")
-  }
+  private def centroidToken(fs: org.apache.hadoop.fs.FileSystem,
+      root: org.apache.hadoop.fs.Path): String =
+    graft.sinks.SwapUtil.listingToken(fs,
+      new org.apache.hadoop.fs.Path(root, "centroids"), recursive = false)
 
   /** True when a persisted index exists at `path`. A swap that crashed
     * between its renames left the index parked, intact, at its backup
@@ -582,16 +571,23 @@ object Similarity {
       query: Seq[Double],
       k: Int,
       nProbe: Int = 4,
-      idCol: String = "id"): DataFrame =
+      idCol: String = "id"): DataFrame = {
+    val cents = persistedCentroids(spark, path) // heals first
     probeAssignments(graft.sinks.StoreRead.parquet(spark, s"$path/assignments"),
-      persistedCentroids(spark, path), idCol, query, k, nProbe)
+      cents, idCol, query, k, nProbe)
+  }
 
+  /** The artifact's centroids, read after healing a parked artifact —
+    * every IVF probe and append starts here.
+    */
   private[ext] def persistedCentroids(
-      spark: SparkSession, path: String): Array[IvfCentroid] =
-    centroidCache.getOrElseUpdate((path, centroidToken(spark, path)),
+      spark: SparkSession, path: String): Array[IvfCentroid] = {
+    val (fs, root) = graft.sinks.SwapUtil.healed(spark, path)
+    centroidCache.getOrElseUpdate((path, centroidToken(fs, root)),
       graft.sinks.StoreRead.parquet(spark, s"$path/centroids")
         .select(col("id"), col("vec"), col("norm")).collect()
         .map(r => IvfCentroid(r.getLong(0), r.getSeq[Double](1).toArray, r.getDouble(2))))
+  }
 
   /** Outcome of an incremental index append: rows added vs already
     * present, the grown index size, and the staleness fraction (rows

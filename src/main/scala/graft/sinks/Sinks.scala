@@ -272,10 +272,12 @@ object UpsertIgnore {
   *    leaves of a per-leaf swap;
   *  - `DurableStore.hasData`, which every store's existence check,
   *    read, count and compaction go through, runs [[healed]];
-  *  - so do the serving artifacts' existence checks
-  *    (`HammingIndex.exists`, `Similarity.persistedIndexExists`,
-  *    `Pq.pqAttached`), which their probes, appends and compactions
-  *    require.
+  *  - so does every serving artifact before it is read: the existence
+  *    checks (`HammingIndex.exists`, `Similarity.persistedIndexExists`,
+  *    `Pq.pqAttached`, which also heals the IVF root under its layer),
+  *    the build_meta read every posting-index probe, append and
+  *    compaction starts from (`HammingIndex.metaOf`), and the centroid
+  *    read every IVF probe starts from (`Similarity.persistedCentroids`).
   * A stale `.<name>__staging` is garbage; the next [[replace]] drops it.
   *
   * CONTRACT — single writer, no concurrent readers during the swap: the
@@ -344,6 +346,35 @@ private[graft] object SwapUtil {
     val out = fs.create(p, true)
     try { out.write(text.getBytes("UTF-8")); out.hsync() }
     finally out.close()
+  }
+
+  /** The UTF-8 text of the small file `p` (a marker, meta or manifest
+    * that [[writeSynced]] wrote), or None when there is no such file.
+    */
+  def readText(fs: org.apache.hadoop.fs.FileSystem, p: Path): Option[String] = {
+    val in =
+      try fs.open(p)
+      catch { case _: java.io.FileNotFoundException => return None }
+    try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString)
+    finally in.close()
+  }
+
+  /** Content token of the listing at `p`: `name:len:mtime` per entry,
+    * sorted and joined by `|`. One listing, no job. Not `recursive`: the
+    * direct children of the directory `p` (or `p` itself when it is a
+    * file). `recursive`: every file under `p`. A rewrite, an append or a
+    * regenerated input moves the token, so a cache keyed by it never
+    * serves what the listing no longer holds.
+    */
+  def listingToken(fs: org.apache.hadoop.fs.FileSystem, p: Path,
+      recursive: Boolean): String = {
+    val entries = scala.collection.mutable.ArrayBuffer.empty[org.apache.hadoop.fs.FileStatus]
+    if (recursive) {
+      val it = fs.listFiles(p, true)
+      while (it.hasNext) entries += it.next()
+    } else entries ++= fs.listStatus(p)
+    entries.map(st => s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}")
+      .sorted.mkString("|")
   }
 
   /** Heal one swap destination: live dir missing + `.name__old` parked →

@@ -95,10 +95,9 @@ object TxTable {
   }
 
   private def readManifest(f: FileSystem, log: Path, v: Long): Manifest = {
-    val in = f.open(new Path(log, manifestName(v)))
-    val text =
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
+    val p = new Path(log, manifestName(v))
+    val text = SwapUtil.readText(f, p)
+      .getOrElse(throw new java.io.FileNotFoundException(p.toString))
     // line format, no JSON dependency: header lines then TAB-separated
     // entry lines. Partition rel-paths never contain TAB/newline (Spark
     // %-escapes control characters in partition dir names).

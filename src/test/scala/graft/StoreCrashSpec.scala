@@ -141,6 +141,13 @@ class StoreCrashSpec extends SparkSpec {
   private def ivfAppend(p: String) =
     Similarity.ivfAppendPersisted(vecs(40 until 50), "vec_id", "v", p)
 
+  /** Recordings of six globally unique tones each (seeds < 24). */
+  private def wav(seed: Int, amp: Double = 0.5) =
+    AudioFingerprint.tonesWav(8000,
+      (0 until 6).map(i => (300.0 + (seed * 6 + i) * 25.0, 1024)), amp)
+  private def recordings(ids: Range) =
+    ids.map(k => (k.toLong, wav(k))).toDF("doc_id", "media")
+
   private val artifacts = Seq(
     Artifact("simhash index `idx`",
       SimhashIndex.build(docs(40), "doc_id", "text", _), identity,
@@ -148,6 +155,13 @@ class StoreCrashSpec extends SparkSpec {
       SimhashIndex.topK(spark, _, docs(6), "doc_id", "text", k = 3)
         .collect().toSet,
       SimhashIndex.compact(spark, _)),
+    Artifact("audio index `idx`",
+      AudioIndex.build(spark, recordings(0 until 6), _), identity,
+      AudioIndex.exists(spark, _),
+      AudioIndex.topK(spark, _,
+        Seq((500L, wav(1, 0.3)), (501L, wav(4, 0.3))).toDF("doc_id", "media"),
+        k = 3).collect().toSet,
+      AudioIndex.append(spark, recordings(6 until 9), _)),
     Artifact("IVF dir", ivf, identity,
       Similarity.persistedIndexExists(spark, _),
       Similarity.ivfTopKPersisted(spark, _, query, k = 5, idCol = "vec_id")
@@ -161,22 +175,77 @@ class StoreCrashSpec extends SparkSpec {
         .collect().toSet,
       p => (ivfAppend(p), Pq.pqAppendPersisted(spark, p))))
 
+  /** A clean and a crashed build of `a`: a swap that crashed between
+    * rename(live, backup) and rename(staging, live) leaves the artifact
+    * parked at the backup name.
+    */
+  private def cleanAndParked(a: Artifact): (String, String) = {
+    val clean = tmpDir("swapclean") + "/idx"
+    a.build(clean)
+    val crashed = tmpDir("swapcrash") + "/idx"
+    a.build(crashed)
+    val live = new java.io.File(a.swapped(crashed))
+    assert(live.renameTo(
+      new java.io.File(live.getParentFile, s".${live.getName}__old")))
+    (clean, crashed)
+  }
+
   artifacts.foreach { a =>
     test(s"swap crash: a parked ${a.name} serves as before the crash") {
-      val clean = tmpDir("swapclean") + "/idx"
-      a.build(clean)
-      val crashed = tmpDir("swapcrash") + "/idx"
-      a.build(crashed)
-      // a swap that crashed between rename(live, backup) and
-      // rename(staging, live) leaves the artifact parked at the backup
-      val live = new java.io.File(a.swapped(crashed))
-      assert(live.renameTo(
-        new java.io.File(live.getParentFile, s".${live.getName}__old")))
+      val (clean, crashed) = cleanAndParked(a)
       assert(a.exists(crashed), s"${a.name}: reads as absent")
       assert(a.probe(crashed) === a.probe(clean))
       assert(a.maintain(crashed) === a.maintain(clean))
       assert(a.probe(crashed) === a.probe(clean))
     }
+
+    test(s"swap crash: a parked ${a.name} serves a probe that comes first") {
+      val (clean, crashed) = cleanAndParked(a)
+      assert(a.probe(crashed) === a.probe(clean))
+      assert(a.exists(crashed), s"${a.name}: reads as absent")
+    }
+  }
+
+  test("legacy build_meta: unpinned fan-outs compact at their defaults, " +
+      "an IVF artifact without one records its baseline on append") {
+    val fs = org.apache.hadoop.fs.FileSystem.getLocal(
+      spark.sparkContext.hadoopConfiguration)
+    def meta(idx: String) = new org.apache.hadoop.fs.Path(idx, "build_meta")
+    def metaText(idx: String) = graft.sinks.SwapUtil.readText(fs, meta(idx)).get
+    /** Rewrite build_meta without its last (fan-out) line. */
+    def unpin(idx: String): String = {
+      val legacy = metaText(idx).linesIterator.toSeq.init.mkString("", "\n", "\n")
+      graft.sinks.SwapUtil.writeSynced(fs, meta(idx), legacy)
+      legacy
+    }
+    val text = tmpDir("legacymeta") + "/simhash"
+    SimhashIndex.build(docs(40), "doc_id", "text", text, filesPerChunk = 1)
+    val textMeta = unpin(text)
+    assert(textMeta.startsWith("maxhamming 7\nrows ") &&
+      !textMeta.contains("filesperchunk"), textMeta)
+    val (textBefore, textAfter) = SimhashIndex.compact(spark, text)
+    assert(metaText(text) === textMeta + "filesperchunk 8\n")
+    assert(textAfter > textBefore, s"$textBefore -> $textAfter files")
+
+    val audio = tmpDir("legacymeta") + "/audio"
+    AudioIndex.build(spark, recordings(0 until 6), audio, files = 1)
+    val audioMeta = unpin(audio)
+    assert(audioMeta.startsWith("fpparams ") && !audioMeta.contains("files"),
+      audioMeta)
+    val (audioBefore, audioAfter) = AudioIndex.compact(spark, audio)
+    assert(metaText(audio) === audioMeta + "files 32\n")
+    assert(audioAfter > audioBefore, s"$audioBefore -> $audioAfter files")
+
+    val vec = tmpDir("legacymeta") + "/ivf"
+    ivf(vec)
+    assert(fs.delete(meta(vec), false))
+    val first = ivfAppend(vec)
+    assert((first.appended, first.indexRows) === ((10L, 50L)))
+    assert(first.staleness === 0.25)
+    assert(metaText(vec) === "rows 40\n")
+    val second = Similarity.ivfAppendPersisted(vecs(50 until 60), "vec_id",
+      "v", vec)
+    assert(second.staleness === 0.5)
   }
 
   private val logs = Seq[(String, String => DataFrame)](
